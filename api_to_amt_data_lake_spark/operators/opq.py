@@ -19,9 +19,10 @@ Spark-first decomposition of each piece:
   `opq_iters=0` is EXACTLY the plain-PQ pipeline (parity contract
   q99zi).
 - Encode AND decode fold into the scan: `_folded_pq_recon_expr`
-  extends `_folded_pq_pairs_expr`'s argmin-over-literal-centroids
-  struct with the centroid vector itself, so the reconstruction
-  `Yhat` is a pure projection — no join, no shuffle.
+  reads the centroid vector out of the same argmin-over-literal-
+  centroids struct that `_folded_pq_pairs_expr` reads the code from
+  (`similarity._pq_argmins`), so the reconstruction `Yhat` is a pure
+  projection — no join, no shuffle.
 - The Procrustes correlation matrix M = X^T Yhat is accumulated as
   per-partition partial Gram matrices (one dim x dim numpy matmul per
   Arrow batch, ONE flattened row per partition) and summed on the
@@ -44,13 +45,13 @@ training-data-pipeline suite) alongside ivfpq/sq8/binary.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from api_to_amt_data_lake_spark.operators.similarity import (
-    _as_double,
+    _pq_argmins,
     _training_sample,
-    _vec_lit,
     pq_adc_topk,
     pq_encode,
     pq_fit,
@@ -91,45 +92,22 @@ def rotate_vectors(
         batches, _ROT_SCHEMA.format(id=id_col, vec=vec_col))
 
 
-def _folded_pq_recon_expr(vec_col: str, codebook: DataFrame) -> Column:
-    """array<double>: the PQ RECONSTRUCTION of a vector, inline. Same
-    argmin-over-literal-centroids fold as `_folded_pq_pairs_expr`, but
-    the min-struct carries the centroid vector as a trailing field, so
-    the chosen sub-centroid pops out of the same array_min — flattened
-    across subs this is decode(encode(v)) as a pure scan projection."""
-    # Trained codebooks carry a row stash (`pq_fit`) — zero-action fold.
-    rows = getattr(codebook, "_model_rows", None)
-    if rows is None:
-        rows = codebook.select("sub_idx", "cent_id", "centroid").collect()
-    by_sub: dict[int, list[tuple[int, list[float]]]] = {}
-    for r in rows:
-        by_sub.setdefault(int(r["sub_idx"]), []).append(
-            (int(r["cent_id"]), [float(x) for x in r["centroid"]]))
-    v = _as_double(F.col(vec_col))
-    dim_of = {j: len(by_sub[j][0][1]) for j in by_sub}
-
-    def recon_for(j: int) -> Column:
-        start = sum(dim_of[i] for i in range(j))
-        sv = F.slice(v, start + 1, dim_of[j])
-        ids = F.lit(np.asarray([cid for cid, _ in by_sub[j]],
-                               dtype=np.int64))
-        vecs = F.array(*[_vec_lit(cv) for _, cv in by_sub[j]])
-        scores = F.zip_with(
-            ids, vecs,
-            lambda cid, cv: F.struct(
-                F.aggregate(
-                    F.zip_with(sv, cv, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0), lambda acc, x: acc + x).alias("d"),
-                cid.alias("c"),
-                cv.alias("v")))
-        return F.array_min(scores).getField("v")
-
-    return F.flatten(F.array(*[recon_for(j) for j in sorted(by_sub)]))
+def _folded_pq_recon_expr(vec_col: str,
+                          codebook: DataFrame | pa.Table) -> Column:
+    """array<double>: the PQ RECONSTRUCTION of a vector, inline, from a
+    codebook model (a pyarrow Table, or a DataFrame collected once by
+    `_model_table`). Same argmin-over-literal-centroids fold as
+    `_folded_pq_pairs_expr` (`_pq_argmins`), keeping the winning
+    centroid vector instead of its id — flattened across subs this is
+    decode(encode(v)) as a pure scan projection."""
+    return F.flatten(F.array(*[
+        best.getField("v")
+        for _, best in _pq_argmins(vec_col, codebook, "opq")]))
 
 
 def _procrustes_rotation(
     train: DataFrame, id_col: str, vec_col: str,
-    rotation: np.ndarray, codebook: DataFrame, dim: int,
+    rotation: np.ndarray, codebook: pa.Table, dim: int,
 ) -> np.ndarray:
     """One OPQ re-rotation step: accumulate M = X^T Yhat distributedly
     (per-partition partial Gram matrices, one flattened row each), then
@@ -200,9 +178,10 @@ def opq_fit(
     corpus: DataFrame, id_col: str, vec_col: str, m: int = 4,
     k: int = 8, iters: int = 3, opq_iters: int = 2,
     sample_frac: float | None = None,
-) -> tuple[np.ndarray, DataFrame, DataFrame]:
-    """Train OPQ: returns (rotation R, codebook on rotated space, codes
-    of the rotated corpus). `opq_iters=0` degenerates to exactly
+) -> tuple[np.ndarray, pa.Table, DataFrame]:
+    """Train OPQ: returns (rotation R, codebook model on the rotated
+    space — a pyarrow Table, as `pq_fit` returns — codes of the rotated
+    corpus). `opq_iters=0` degenerates to exactly
     `pq_fit` + folded `pq_encode` (R = I, rotation short-circuited) —
     the q99zi parity contract. Trainers iterate over the deterministic
     id-hash sample when `sample_frac` is set; the full corpus is
@@ -219,7 +198,7 @@ def opq_fit(
 
 
 def opq_topk(
-    queries: DataFrame, rotation: np.ndarray, codebook: DataFrame,
+    queries: DataFrame, rotation: np.ndarray, codebook: DataFrame | pa.Table,
     codes: DataFrame, id_col: str, vec_col: str, m: int = 4, k: int = 3,
 ) -> DataFrame:
     """ADC top-k in the rotated space: rotate the (few) queries with the

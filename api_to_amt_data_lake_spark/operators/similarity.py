@@ -22,8 +22,37 @@ O(Q × N).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+# Row bound on every driver-side collect here (model tables, re-rank
+# candidate sets). Models are kc- or m*k-sized; a frame over the bound
+# is a corpus passed where a model belongs, and collecting it would
+# move the corpus onto the driver.
+MAX_DRIVER_ROWS = 65_536
+
+
+def _model_table(x: DataFrame | pa.Table, cols: tuple[str, ...],
+                 op: str) -> pa.Table:
+    """`x` as a pyarrow Table, the driver-side model value. A Table
+    passes through; a DataFrame is collected once as Arrow (`cols` only,
+    at most MAX_DRIVER_ROWS + 1 rows). Over the bound raises ValueError
+    naming `op`, never a silent corpus-sized collect."""
+    if isinstance(x, DataFrame):
+        x = x.select(*cols).limit(MAX_DRIVER_ROWS + 1).toArrow()
+    if x.num_rows > MAX_DRIVER_ROWS:
+        raise ValueError(
+            f"{op}: input exceeds the {MAX_DRIVER_ROWS:,}-row "
+            f"driver-collect bound ({x.num_rows:,} rows read)")
+    return x
+
+
+def _model_frame(spark: SparkSession, x: DataFrame | pa.Table) -> DataFrame:
+    """A model as a DataFrame, for the plans that join it. A Table
+    becomes a LocalRelation: it carries real size statistics (so it
+    broadcasts) and scanning it starts no Spark job."""
+    return x if isinstance(x, DataFrame) else spark.createDataFrame(x)
 
 
 def _as_double(c: Column) -> Column:
@@ -151,13 +180,15 @@ def _cosine_topk_matmul(
 
 
 def ivf_assign(
-    corpus: DataFrame, centroids: DataFrame, id_col: str, vec_col: str,
+    corpus: DataFrame, centroids: DataFrame | pa.Table, id_col: str,
+    vec_col: str,
 ) -> DataFrame:
     """Assign each corpus vector to its nearest centroid (min squared
     euclidean, centroid id tiebreak). Centroids are broadcast; the argmin
     is a window-free groupBy(min-struct) — one narrow pass over the corpus.
-    Output: id, bucket."""
-    cent = F.broadcast(centroids.select(
+    This join plan is the reference the folded argmins are tested
+    against. Output: id, bucket."""
+    cent = F.broadcast(_model_frame(corpus.sparkSession, centroids).select(
         F.col(id_col).alias("_cent_id"), F.col(vec_col).alias("_cent_vec")
     ))
     scored = corpus.select(F.col(id_col), F.col(vec_col)).crossJoin(cent).select(
@@ -175,46 +206,21 @@ def ivf_assign(
 
 
 def ivf_probe_buckets(
-    queries: DataFrame, centroids: DataFrame, id_col: str, vec_col: str,
-    nprobe: int,
+    queries: DataFrame, centroids: DataFrame | pa.Table, id_col: str,
+    vec_col: str, nprobe: int,
 ) -> DataFrame:
     """The `nprobe` nearest centroid buckets per query vector (rank by
     squared euclidean, centroid-id tiebreak). One row per (query, bucket).
-    Centroids broadcast; the rank window partitions by query id — k rows
-    per query, never a large sort.
 
-    When the centroid frame carries a trainer/loader row stash
-    (`_model_rows`), the probe folds into the scan instead (round 12,
-    guide §2.4): slice(array_sort(per-centroid scores), 1, nprobe) is
-    the identical rank — round-6 distance asc, centroid-id tiebreak —
-    as the window path, with zero joins and zero window exchange.
-    Stashless model frames keep the join+window plan (no collect is
-    added where none existed)."""
-    cent_rows = getattr(centroids, "_model_rows", None)
-    if cent_rows is not None:
-        cents = [(r[0], [float(x) for x in r[1]]) for r in cent_rows]
-        return queries.select(
-            F.col(id_col),
-            F.explode(F.transform(
-                F.slice(F.array_sort(
-                    _centroid_scores_expr(F.col(vec_col), cents)),
-                    1, nprobe),
-                lambda s: s.getField("cid"))).alias("bucket"),
-        )
-    cent = F.broadcast(centroids.select(
-        F.col(id_col).alias("_cent_id"), F.col(vec_col).alias("_cent_vec")
-    ))
-    scored = queries.select(F.col(id_col), F.col(vec_col)).crossJoin(cent).select(
+    The centroid model (a pyarrow Table, or a DataFrame converted once
+    by `_model_table`) folds into the scan: slice(array_sort(per-centroid
+    scores), 1, nprobe) is the round-6 distance asc, centroid-id asc
+    rank with zero joins and zero window exchange."""
+    model = _model_table(centroids, (id_col, vec_col), "ivf_probe_buckets")
+    return queries.select(
         F.col(id_col),
-        F.col("_cent_id").alias("bucket"),
-        F.round(sq_euclidean(F.col(vec_col), F.col("_cent_vec")), 6).alias("_d"),
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("_d").asc(),
-                                           F.col("bucket").asc())
-    return (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= nprobe)
-        .select(id_col, "bucket")
+        F.explode(_probe_expr(F.col(vec_col), model, id_col, vec_col,
+                              nprobe)).alias("bucket"),
     )
 
 
@@ -231,13 +237,13 @@ def _vec_lit(values) -> Column:
     return F.lit(np.asarray([float(x) for x in values], dtype=np.float64))
 
 
-def _centroid_scores_expr(vec_col: Column,
-                          cents: list[tuple[int, list[float]]],
-                          with_cv: bool = False) -> Column:
+def _centroid_scores_expr(vec: Column, model: pa.Table, id_col: str,
+                          vec_col: str, with_cv: bool = False) -> Column:
     """array<struct<d,cid>> of (rounded squared-euclidean, centroid id)
-    for a vector column against LITERAL centroids — the model folded
-    into the expression, so nearest-centroid logic runs at scan speed
-    with no join and no shuffle. Struct order (d first, cid second)
+    for a vector column against the LITERAL centroids of a model table
+    (`id_col`, `vec_col`) — the model folded into the expression, so
+    nearest-centroid logic runs at scan speed with no join and no
+    shuffle. Struct order (d first, cid second)
     makes array_min/array_sort reproduce ivf_assign's min-struct
     semantics exactly (round-6 distance, centroid-id tiebreak).
 
@@ -254,17 +260,17 @@ def _centroid_scores_expr(vec_col: Column,
     identical)."""
     import numpy as np
 
-    v = _as_double(vec_col)
-    if all(isinstance(cid, (int, np.integer)) for cid, _ in cents):
-        ids = F.lit(np.asarray([int(cid) for cid, _ in cents],
-                               dtype=np.int64))
+    v = _as_double(vec)
+    cids = model.column(id_col).to_pylist()
+    if pa.types.is_integer(model.schema.field(id_col).type):
+        ids = F.lit(np.asarray(cids, dtype=np.int64))
     else:
         # Non-integer centroid ids (string labels, etc.): keep the id
-        # column's own type instead of failing int() at plan build.
-        # k literal nodes instead of one ndarray Literal — fine, the
-        # O(k*dim) vector payload below dominates either way.
-        ids = F.array(*[F.lit(cid) for cid, _ in cents])
-    vecs = F.array(*[_vec_lit(cv) for _, cv in cents])
+        # column's own type. k literal nodes instead of one ndarray
+        # Literal — fine, the O(k*dim) vector payload below dominates.
+        ids = F.array(*[F.lit(cid) for cid in cids])
+    vecs = F.array(*[_vec_lit(cv)
+                     for cv in model.column(vec_col).to_pylist()])
     return F.zip_with(
         ids, vecs,
         lambda cid, cv: F.struct(
@@ -275,8 +281,18 @@ def _centroid_scores_expr(vec_col: Column,
             *((cv.alias("cv"),) if with_cv else ())))
 
 
+def _probe_expr(vec: Column, model: pa.Table, id_col: str, vec_col: str,
+                nprobe: int) -> Column:
+    """array of the `nprobe` nearest centroid ids of `vec`, nearest
+    first (`ivf_probe_buckets`' rank, as one scan expression)."""
+    return F.transform(
+        F.slice(F.array_sort(
+            _centroid_scores_expr(vec, model, id_col, vec_col)), 1, nprobe),
+        lambda s: s.getField("cid"))
+
+
 def ivf_topk(
-    queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
+    queries: DataFrame, corpus: DataFrame, centroids: DataFrame | pa.Table,
     id_col: str, vec_col: str, k: int, nprobe: int = 1,
 ) -> DataFrame:
     """IVF search: probe the query's `nprobe` nearest buckets.
@@ -294,23 +310,17 @@ def ivf_topk(
     the whole corpus once for the assignment and again for the join
     back. At 100 TB that is two full-corpus shuffles saved per search.
     """
-    cent_rows = getattr(centroids, "_model_rows", None)
-    if cent_rows is None:  # not a trainer output: collect the model
-        cent_rows = centroids.select(F.col(id_col),
-                                     F.col(vec_col)).collect()
-    cents = [(r[0], [float(x) for x in r[1]]) for r in cent_rows]
+    model = _model_table(centroids, (id_col, vec_col), "ivf_topk")
     corpus_b = corpus.select(
         F.col(id_col).alias("match_id"), F.col(vec_col).alias("_cv"),
-        F.array_min(_centroid_scores_expr(F.col(vec_col), cents))
+        F.array_min(_centroid_scores_expr(F.col(vec_col), model, id_col,
+                                          vec_col))
         .getField("cid").alias("bucket"),
     )
     queries_b = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"),
-        F.explode(F.transform(
-            F.slice(F.array_sort(
-                _centroid_scores_expr(F.col(vec_col), cents)),
-                1, nprobe),
-            lambda s: s.getField("cid"))).alias("bucket"),
+        F.explode(_probe_expr(F.col(vec_col), model, id_col, vec_col,
+                              nprobe)).alias("bucket"),
     )
     sims = (
         F.broadcast(queries_b)
@@ -332,8 +342,8 @@ def ivf_topk(
 
 
 def knn_graph(
-    corpus: DataFrame, centroids: DataFrame, id_col: str, vec_col: str,
-    k: int, n_salt: int | str | None = None,
+    corpus: DataFrame, centroids: DataFrame | pa.Table, id_col: str,
+    vec_col: str, k: int, n_salt: int | str | None = None,
 ) -> DataFrame:
     """Approximate k-NN graph of the corpus against ITSELF — every
     vector's k most cosine-similar neighbors among vectors sharing its
@@ -362,14 +372,11 @@ def knn_graph(
     — uniform corpora keep the plain join. Results are identical
     either way (per-src top-k is salt-invariant; parity-tested).
     """
-    cent_rows = getattr(centroids, "_model_rows", None)
-    if cent_rows is None:  # not a trainer output: collect the model
-        cent_rows = centroids.select(F.col(id_col),
-                                     F.col(vec_col)).collect()
-    cents = [(r[0], [float(x) for x in r[1]]) for r in cent_rows]
+    model = _model_table(centroids, (id_col, vec_col), "knn_graph")
     b = corpus.select(
         F.col(id_col), F.col(vec_col),
-        F.array_min(_centroid_scores_expr(F.col(vec_col), cents))
+        F.array_min(_centroid_scores_expr(F.col(vec_col), model, id_col,
+                                          vec_col))
         .getField("cid").alias("bucket"))
     if n_salt == "auto":
         from api_to_amt_data_lake_spark.operators.dedup import _auto_n_salt
@@ -438,7 +445,7 @@ def _training_sample(
 def kmeans_fit(
     corpus: DataFrame, id_col: str, vec_col: str, k: int = 8, iters: int = 3,
     sample_frac: float | None = None,
-) -> DataFrame:
+) -> pa.Table:
     """Distributed Lloyd's k-means over an embedding column — the centroid
     trainer for `ivf_topk` (real IVF indexes train centroids, they don't
     sample arbitrary rows).
@@ -466,9 +473,12 @@ def kmeans_fit(
     iteration is the partial-aggregated (bucket, pos) mean — the
     groupBy(id) assignment shuffle and the corpus join-back are gone.
 
-    Output: (bucket, centroid vec) with `id_col`/`vec_col` names so it
-    plugs straight into `ivf_topk(..., centroids=...)`. Bucket labels are
-    seed ids (stable, deterministic), not 0..k-1.
+    Output: the model value — a pyarrow Table of k rows, (bucket,
+    centroid vec) under the `id_col`/`vec_col` names, so it plugs
+    straight into `ivf_topk(..., centroids=...)` and every other
+    centroid consumer. Bucket labels are seed ids (stable,
+    deterministic), not 0..k-1. The lazy loop runs as ONE fused Spark
+    action (the final `toArrow`); nothing stays cached afterwards.
 
     `sample_frac` fits the centroids on a deterministic id-hash subset
     (`_training_sample`) — at 100 TB every Lloyd's iteration then scans
@@ -550,22 +560,14 @@ def kmeans_fit(
         # the cache each round would execute twice per reference. The
         # loop stays LAZY (an eager count per round costs a job
         # boundary where rounds otherwise fuse — measured +2s on the
-        # sf0.1 trainers); one materialization at the end fills every
-        # round's cache in a single fused action, after which the
-        # intermediate model frames are released so only the returned
-        # model stays resident.
+        # sf0.1 trainers); the one action at the end fills every
+        # round's cache, after which all of them are released.
         cent = cent.cache()
         interm.append(cent)
-    # Materialize via collect, not count: the SAME single fused action
-    # fills the cache, and the k returned rows ride along as the model
-    # stash — folded consumers (`ivf_residuals`, `ivf_topk`,
-    # `knn_graph`) then skip their own collect action (guide §1.2:
-    # per-action fixed cost dominates model-sized work; k rows on the
-    # driver are free). Rows are in the final select's (id, vec) order.
-    cent._model_rows = cent.collect()
-    for f in interm[:-1]:
+    model = cent.toArrow()
+    for f in interm:
         f.unpersist()
-    return cent
+    return model
 
 
 def sq8_minmax(corpus: DataFrame, vec_col: str) -> DataFrame:
@@ -647,7 +649,7 @@ def kmeans_fit_keyed(
     subs: DataFrame, key_col: str, id_col: str, vec_col: str,
     k: int = 8, iters: int = 3, n_init_buckets: int = 256,
     sample_frac: float | None = None,
-) -> DataFrame:
+) -> pa.Table:
     """Keyed distributed Lloyd's: train an INDEPENDENT k-means model per
     value of `key_col` in ONE set of Spark jobs. The math per key is
     bit-identical to `kmeans_fit` on that key's slice (same lowest-id
@@ -656,9 +658,10 @@ def kmeans_fit_keyed(
     carry-forward) — parity-tested — but where m sequential `kmeans_fit`
     calls cost m × iters × 2 jobs, this costs iters × 2 regardless of m.
 
-    Input: (key, id, vec) rows. Output: (key, id, vec) — k centroid
-    rows per key, labeled by seed id; the whole model is |keys|×k rows
-    (broadcast-sized however big the corpus is).
+    Input: (key, id, vec) rows. Output: the model value, a pyarrow
+    Table of (key, id, vec) — k centroid rows per key, labeled by seed
+    id; the whole model is |keys|×k rows (broadcast-sized however big
+    the corpus is), produced by one fused action like `kmeans_fit`.
 
     Scale notes: the per-key lowest-id top-k init uses the two-phase
     bucketed rank (local top-k per (key, hash-bucket), then global top-k
@@ -743,25 +746,22 @@ def kmeans_fit_keyed(
         # loop, one fused materialization, then release intermediates.
         cent = cent.cache()
         interm.append(cent)
-    # Collect-to-materialize (see `kmeans_fit`): the fused action also
-    # yields the |keys|×k model rows as a stash so folded consumers
-    # skip their re-collect. Rows are (key, id, vec) — the final
-    # select's order.
-    cent._model_rows = cent.collect()
-    for f in interm[:-1]:
+    model = cent.toArrow()
+    for f in interm:
         f.unpersist()
-    return cent
+    return model
 
 
 def pq_fit(
     corpus: DataFrame, id_col: str, vec_col: str, m: int = 4, k: int = 8,
     iters: int = 3, cache: bool = True, sample_frac: float | None = None,
-) -> DataFrame:
+) -> pa.Table:
     """Product-quantization codebook trainer (Jégou et al., "Product
     Quantization for Nearest Neighbor Search"): split each vector into m
     subvectors and train k-means independently per subspace. Output:
-    (sub_idx, cent_id, centroid) — m×k rows, the whole codebook is a
-    broadcast-sized table no matter how big the corpus is.
+    the codebook model value, a pyarrow Table of (sub_idx, cent_id,
+    centroid) — m×k rows no matter how big the corpus is. `cache` is
+    kept for signature stability; the model lives on the driver.
 
     All m subspaces train in ONE keyed Lloyd's loop (`kmeans_fit_keyed`
     with sub_idx as the model key): iters × 2 Spark jobs total instead
@@ -775,30 +775,10 @@ def pq_fit(
     compression, near-exact) and `ivf` (no compression, scoped search).
     """
     subs = _explode_subvectors(corpus, id_col, vec_col, m)
-    keyed = kmeans_fit_keyed(
+    return kmeans_fit_keyed(
         subs, "sub_idx", id_col, "sv", k=k, iters=iters,
         sample_frac=sample_frac,
-    )
-    book = keyed.select(
-        "sub_idx", F.col(id_col).alias("cent_id"), F.col("sv").alias("centroid")
-    )
-    # The codebook is a MODEL (m×k rows), not data: downstream encode /
-    # ADC reference it several times. `kmeans_fit_keyed` already fills
-    # the final model frame's cache with its own materializing collect
-    # (the projection here is column renames on top of that cache), so
-    # an extra eager count() would only add one more driver action per
-    # fit — removed in round 11 (guide §1.2: per-action fixed cost
-    # dominates small models; the training jobs can already never
-    # re-run). `cache` is kept for signature stability; the model is
-    # always pinned. The keyed trainer's row stash is re-labeled to the
-    # renamed schema so `_folded_pq_pairs_expr` skips its collect too.
-    rows = getattr(keyed, "_model_rows", None)
-    if rows is not None:
-        book._model_rows = [
-            {"sub_idx": r[0], "cent_id": r[1], "centroid": r[2]}
-            for r in rows
-        ]
-    return book
+    ).rename_columns(["sub_idx", "cent_id", "centroid"])
 
 
 def _explode_subvectors(df: DataFrame, id_col: str, vec_col: str,
@@ -815,34 +795,31 @@ def _explode_subvectors(df: DataFrame, id_col: str, vec_col: str,
              F.col("_s.sv").alias("sv"))
 
 
-def _folded_pq_pairs_expr(vec_col: str, codebook: DataFrame) -> Column:
-    """array<struct<sub_idx,code>> computed inline from a MATERIALIZED
-    codebook: collect the m×k entries, slice each subvector by the
-    codebook's own per-sub dimensions (contiguous equal splits, matching
-    `_subvector`), argmin via array_min over literal struct(d, cent_id)
-    — the same raw-double distance and cent-id tiebreak as the groupBy
-    path, with zero shuffle and zero join. Per sub-space the scores are
-    ONE zip_with over (literal id array, literal vector array) — k+2
-    driver calls per sub, not ~6k py4j round-trips (see
+def _pq_argmins(vec_col: str, codebook: DataFrame | pa.Table,
+                op: str) -> list[tuple[int, Column]]:
+    """Per sub-space j of a codebook model, ascending: array_min over
+    literal struct(d, c, v) of its sub-centroids against slice j of
+    `vec_col` — the raw-double distance and cent-id tiebreak of
+    `pq_encode`'s groupBy path (v trails and never decides: (d, c) is
+    unique), so `.c` is the code and `.v` the decoded sub-vector. Each
+    subvector is sliced by the codebook's own per-sub dimensions
+    (contiguous equal splits, matching `_subvector`), and per sub the
+    scores are ONE zip_with over (literal id array, literal vector
+    array) — k+2 driver calls, not ~6k py4j round-trips (see
     `_centroid_scores_expr`)."""
     import numpy as np
 
-    # Trained codebooks carry their rows as a stash (`pq_fit`), so the
-    # model-to-expression fold costs zero Spark actions; a codebook
-    # loaded from storage (ann_index append/search) collects as before.
-    rows = getattr(codebook, "_model_rows", None)
-    if rows is None:
-        rows = codebook.select("sub_idx", "cent_id", "centroid").collect()
+    book = _model_table(codebook, ("sub_idx", "cent_id", "centroid"), op)
     by_sub: dict[int, list[tuple[int, list[float]]]] = {}
-    for r in rows:
-        by_sub.setdefault(int(r["sub_idx"]), []).append(
-            (int(r["cent_id"]), [float(x) for x in r["centroid"]]))
+    for j, cid, cv in zip(*(book.column(c).to_pylist()
+                            for c in ("sub_idx", "cent_id", "centroid"))):
+        by_sub.setdefault(int(j), []).append((int(cid), cv))
     v = _as_double(F.col(vec_col))
-    dim_of = {j: len(by_sub[j][0][1]) for j in by_sub}
-
-    def code_for(j: int):
-        start = sum(dim_of[i] for i in range(j))
-        sv = F.slice(v, start + 1, dim_of[j])
+    out, start = [], 0
+    for j in sorted(by_sub):
+        dim = len(by_sub[j][0][1])
+        sv = F.slice(v, start + 1, dim)
+        start += dim
         ids = F.lit(np.asarray([cid for cid, _ in by_sub[j]],
                                dtype=np.int64))
         vecs = F.array(*[_vec_lit(cv) for _, cv in by_sub[j]])
@@ -852,19 +829,28 @@ def _folded_pq_pairs_expr(vec_col: str, codebook: DataFrame) -> Column:
                 F.aggregate(
                     F.zip_with(sv, cv, lambda a, b: (a - b) * (a - b)),
                     F.lit(0.0), lambda acc, x: acc + x).alias("d"),
-                cid.alias("c")))
-        return F.array_min(scores).getField("c")
+                cid.alias("c"),
+                cv.alias("v")))
+        out.append((j, F.array_min(scores)))
+    return out
 
+
+def _folded_pq_pairs_expr(vec_col: str,
+                          codebook: DataFrame | pa.Table) -> Column:
+    """array<struct<sub_idx,code>> computed inline from a codebook model
+    (a pyarrow Table, or a DataFrame collected once by `_model_table`):
+    every subvector's code is an argmin over literal centroids
+    (`_pq_argmins`) — zero shuffle and zero join."""
     return F.array(*[
         F.struct(F.lit(j).cast("int").alias("sub_idx"),
-                 code_for(j).alias("code"))
-        for j in sorted(by_sub)
+                 best.getField("c").alias("code"))
+        for j, best in _pq_argmins(vec_col, codebook, "pq_encode")
     ])
 
 
 def pq_encode(
-    corpus: DataFrame, codebook: DataFrame, id_col: str, vec_col: str,
-    m: int = 4, folded: bool = False,
+    corpus: DataFrame, codebook: DataFrame | pa.Table, id_col: str,
+    vec_col: str, m: int = 4, folded: bool = False,
 ) -> DataFrame:
     """Assign every subvector its nearest codebook centroid. Output:
     (id, sub_idx, code) — m small-int rows per vector, the compressed
@@ -876,11 +862,11 @@ def pq_encode(
     — no shuffle carries vectors, only (id, sub, code) triples.
 
     `folded=True` is the post-training shape (ivfpq_fit uses it): the
-    codebook is a trained MODEL, so collect its m×k rows and compute
-    every subvector's code inline (array_min over literal per-centroid
+    codebook model's m×k rows fold into the scan and every subvector's
+    code is computed inline (array_min over literal per-centroid
     distances, same raw-double distance and cent-id tiebreak) — zero
     shuffle, zero join; the encode pass becomes a pure scan projection.
-    Requires a materialized codebook (pq_fit returns one).
+    The default plan stays as the reference the fold is tested against.
     """
     if folded:
         pairs = _folded_pq_pairs_expr(vec_col, codebook)
@@ -890,8 +876,9 @@ def pq_encode(
                  F.col("_p.code").alias("code"))
     subs = _explode_subvectors(corpus, id_col, vec_col, m)
     d = sq_euclidean(F.col("sv"), F.col("centroid"))
+    book = _model_frame(corpus.sparkSession, codebook)
     return (
-        subs.join(F.broadcast(codebook), "sub_idx")
+        subs.join(F.broadcast(book), "sub_idx")
         .select(id_col, "sub_idx",
                 F.struct(d.alias("d"), F.col("cent_id").alias("c")).alias("_dc"))
         .groupBy(id_col, "sub_idx")
@@ -901,8 +888,8 @@ def pq_encode(
 
 
 def ivf_residuals(
-    corpus: DataFrame, coarse: DataFrame, id_col: str, vec_col: str,
-    folded: bool = False,
+    corpus: DataFrame, coarse: DataFrame | pa.Table, id_col: str,
+    vec_col: str, folded: bool = False,
 ) -> DataFrame:
     """(id, bucket, residual): assign every vector to its nearest coarse
     centroid (`ivf_assign` semantics — round-6 distance, centroid-id
@@ -912,41 +899,24 @@ def ivf_residuals(
     Default: centroids broadcast, subtraction is a scan-level zip_with
     (one keyed exchange for the argmin + one join back).
 
-    `folded=True` (post-training, used by ivfpq_fit): collect the
-    trained kc×dim centroids and compute bucket AND residual inline —
-    array_min over literal struct(d, cid, cv) keeps the exact
-    round-6 + cid-tiebreak argmin (cv never decides: (d, cid) is
-    unique) and hands back the winning centroid vector for the
+    `folded=True` (post-training, used by ivfpq_fit): the kc×dim
+    centroid model folds into the scan and bucket AND residual are
+    computed inline — array_min over literal struct(d, cid, cv) keeps
+    the exact round-6 + cid-tiebreak argmin (cv never decides: (d, cid)
+    is unique) and hands back the winning centroid vector for the
     subtraction. Zero shuffle, zero join — the residual pass becomes a
-    scan projection."""
+    scan projection. The default join plan stays as its reference."""
     if folded:
-        import numpy as np
-
-        # Trainer-produced centroids carry a (id, vec)-ordered row
-        # stash (`kmeans_fit`) — zero-action fold; parquet-loaded
-        # models collect as before.
-        rows = getattr(coarse, "_model_rows", None)
-        if rows is None:
-            rows = coarse.select(F.col(id_col), F.col(vec_col)).collect()
-        v = _as_double(F.col(vec_col))
-        ids = F.lit(np.asarray([int(r[0]) for r in rows],
-                               dtype=np.int64))
-        vecs = F.array(*[_vec_lit(r[1]) for r in rows])
-        scores = F.zip_with(
-            ids, vecs,
-            lambda cid, cv: F.struct(
-                F.round(F.aggregate(
-                    F.zip_with(v, cv, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0), lambda acc, x: acc + x), 6).alias("d"),
-                cid.alias("cid"),
-                cv.alias("cv")))
-        best = F.array_min(scores)
+        model = _model_table(coarse, (id_col, vec_col), "ivf_residuals")
+        best = F.array_min(_centroid_scores_expr(
+            F.col(vec_col), model, id_col, vec_col, with_cv=True))
         return corpus.select(
             F.col(id_col),
             best.getField("cid").alias("bucket"),
-            F.zip_with(v, best.getField("cv"),
+            F.zip_with(_as_double(F.col(vec_col)), best.getField("cv"),
                        lambda a, b: a - b).alias(vec_col),
         )
+    coarse = _model_frame(corpus.sparkSession, coarse)
     assign = ivf_assign(corpus, coarse, id_col, vec_col)
     cents = F.broadcast(coarse.select(
         F.col(id_col).alias("bucket"), _as_double(F.col(vec_col)).alias("_cv")
@@ -965,11 +935,12 @@ def ivfpq_fit(
     corpus: DataFrame, id_col: str, vec_col: str, kc: int = 4,
     coarse_iters: int = 2, m: int = 2, k: int = 4, iters: int = 2,
     pin: bool = False, sample_frac: float | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> tuple[pa.Table, pa.Table, DataFrame]:
     """FAISS-style IVFPQ index build: coarse k-means over the full
     vectors scopes the search (IVF), product quantization over the
     RESIDUALS compresses what's stored per vector (PQ). Returns
-    (coarse centroids, PQ codebook, codes) where codes =
+    (coarse centroids, PQ codebook, codes): the two models are pyarrow
+    Tables (`kmeans_fit`, `pq_fit`) and codes is the lazy frame
     (id, bucket, sub_idx, code) — m small ints plus a bucket per
     vector, the complete compressed index.
 
@@ -983,7 +954,7 @@ def ivfpq_fit(
     an unpinned PQ iteration used to re-run the coarse ASSIGNMENT JOIN
     per round, which the pin amortized. The residual is now a
     scan-level folded expression (bucket + subtraction inline from the
-    materialized coarse model), so the unpinned trainer costs extra
+    driver-side coarse model), so the unpinned trainer costs extra
     CORPUS SCANS (one per PQ round + init), not extra exchanges —
     and skipping the pin drops two driver actions and the full-corpus
     residual materialization per fit (measured 2×: 5.0 s → 2.3 s per
@@ -1001,9 +972,9 @@ def ivfpq_fit(
     """
     coarse = kmeans_fit(corpus, id_col, vec_col, k=kc, iters=coarse_iters,
                         sample_frac=sample_frac)
-    # kmeans_fit returns a MATERIALIZED model (it fills its cache with a
-    # count), so the residual pass can fold the centroids into the scan:
-    # bucket + residual inline, no assignment exchange, no join back.
+    # The centroid model is on the driver, so the residual pass folds it
+    # into the scan: bucket + residual inline, no assignment exchange,
+    # no join back.
     res = ivf_residuals(corpus, coarse, id_col, vec_col, folded=True)
     if pin:
         # Unconditional localCheckpoint is deliberate (VERDICT r9
@@ -1014,8 +985,8 @@ def ivfpq_fit(
     rvecs = res.select(id_col, vec_col)
     book = pq_fit(rvecs, id_col, vec_col, m=m, k=k, iters=iters,
                   sample_frac=sample_frac)
-    # Same post-training shape for the encode pass: the codebook is
-    # materialized, so codes are computed inline per row — and because
+    # Same post-training shape for the encode pass: codes are computed
+    # inline per row from the codebook model — and because
     # `res` already carries the bucket, emitting it in the same
     # projection removes the codes↔res id join entirely.
     pairs = _folded_pq_pairs_expr(vec_col, book)
@@ -1027,9 +998,9 @@ def ivfpq_fit(
 
 
 def ivfpq_topk(
-    queries: DataFrame, coarse: DataFrame, book: DataFrame,
-    codes: DataFrame, id_col: str, vec_col: str, m: int = 2, k: int = 3,
-    nprobe: int = 1,
+    queries: DataFrame, coarse: DataFrame | pa.Table,
+    book: DataFrame | pa.Table, codes: DataFrame, id_col: str,
+    vec_col: str, m: int = 2, k: int = 3, nprobe: int = 1,
 ) -> DataFrame:
     """IVFPQ search: probe each query's `nprobe` nearest coarse buckets,
     compute the query's PER-BUCKET residual, and rank the bucket's codes
@@ -1042,24 +1013,22 @@ def ivfpq_topk(
     (query, match, partial-sum) rows. Same exact-decimal ADC fold as
     `pq_adc_topk`, so results are engine-stable.
 
-    Round-12 shape: the coarse model is a trained (or loaded)
-    broadcast-sized table, so the whole query side — probe ranking AND
-    per-bucket residual — folds into ONE scan expression over the
-    queries (guide §2.4): `array_sort` over literal
-    struct(round-6 d, cid, cv) reproduces `ivf_probe_buckets`' exact
+    The coarse model (a pyarrow Table — trainer output or loaded index
+    — or a DataFrame collected once by `_model_table`) is kc rows, so
+    the whole query side — probe ranking AND per-bucket residual —
+    folds into ONE scan expression over the queries: `array_sort` over
+    literal struct(round-6 d, cid, cv) reproduces `ivf_probe_buckets`' exact
     rank order (d asc, bucket asc; cv trails and never decides because
     (d, cid) is unique), `slice(…, 1, nprobe)` its rank <= nprobe
     filter, and the winning centroid vector rides in the struct so the
     residual is an inline zip_with. That removes the probe window plus
     the queries⋈probes⋈centroids joins (and their exchanges) from
-    every search. Trainer outputs carry their rows as a stash
-    (`kmeans_fit`); loaded models collect once — kc model rows.
+    every search. The codebook joins the distance table as a
+    LocalRelation (`_model_frame`).
     """
-    cent_rows = getattr(coarse, "_model_rows", None)
-    if cent_rows is None:  # not a trainer output: collect the model
-        cent_rows = coarse.select(F.col(id_col), F.col(vec_col)).collect()
-    cents = [(r[0], [float(x) for x in r[1]]) for r in cent_rows]
-    scores = _centroid_scores_expr(F.col(vec_col), cents, with_cv=True)
+    model = _model_table(coarse, (id_col, vec_col), "ivfpq_topk")
+    scores = _centroid_scores_expr(F.col(vec_col), model, id_col, vec_col,
+                                   with_cv=True)
     qres = queries.select(
         F.col(id_col).alias("query_id"),
         _as_double(F.col(vec_col)).alias("_qv"),
@@ -1082,7 +1051,7 @@ def ivfpq_topk(
     ).select("query_id", "bucket", F.col("_s.sub_idx").alias("sub_idx"),
              F.col("_s.sv").alias("sv"))
     dist_tab = (
-        qsubs.join(book, "sub_idx")
+        qsubs.join(_model_frame(queries.sparkSession, book), "sub_idx")
         .select("query_id", "bucket", "sub_idx",
                 F.col("cent_id").alias("code"),
                 F.round(sq_euclidean(F.col("sv"), F.col("centroid")), 9)
@@ -1103,7 +1072,7 @@ def ivfpq_topk(
 
 
 def pq_adc_topk(
-    queries: DataFrame, codes: DataFrame, codebook: DataFrame,
+    queries: DataFrame, codes: DataFrame, codebook: DataFrame | pa.Table,
     id_col: str, vec_col: str, m: int = 4, k: int = 3,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: the query stays
@@ -1120,7 +1089,7 @@ def pq_adc_topk(
     qsubs = _explode_subvectors(queries, id_col, vec_col, m).select(
         F.col(id_col).alias("query_id"), "sub_idx", "sv")
     dist_tab = (
-        qsubs.join(codebook, "sub_idx")
+        qsubs.join(_model_frame(queries.sparkSession, codebook), "sub_idx")
         .select("query_id", "sub_idx", F.col("cent_id").alias("code"),
                 F.round(sq_euclidean(F.col("sv"), F.col("centroid")), 9)
                 .alias("_d"))
@@ -1303,9 +1272,10 @@ def hard_negatives(
 
 
 def ivfpq_topk_refined(
-    queries: DataFrame, coarse: DataFrame, book: DataFrame,
-    codes: DataFrame, corpus: DataFrame, id_col: str, vec_col: str,
-    m: int = 2, k: int = 3, refine_from: int = 10, nprobe: int = 1,
+    queries: DataFrame, coarse: DataFrame | pa.Table,
+    book: DataFrame | pa.Table, codes: DataFrame, corpus: DataFrame,
+    id_col: str, vec_col: str, m: int = 2, k: int = 3,
+    refine_from: int = 10, nprobe: int = 1,
 ) -> DataFrame:
     """IVFPQ search with an exact re-rank stage — FAISS's
     `IndexRefineFlat` composition, the standard recall-recovery move:
@@ -1354,10 +1324,10 @@ def _exact_rerank(cands: DataFrame, queries: DataFrame,
 
 
 def ivfpq_topk_refined_pruned(
-    queries: DataFrame, coarse: DataFrame, book: DataFrame,
-    codes: DataFrame, vector_store_path: str, id_col: str,
-    vec_col: str, m: int = 2, k: int = 3, refine_from: int = 10,
-    nprobe: int = 1,
+    queries: DataFrame, coarse: DataFrame | pa.Table,
+    book: DataFrame | pa.Table, codes: DataFrame, vector_store_path: str,
+    id_col: str, vec_col: str, m: int = 2, k: int = 3,
+    refine_from: int = 10, nprobe: int = 1,
 ) -> tuple[DataFrame, list[str], int]:
     """`ivfpq_topk_refined` with the exact-fetch side composed with the
     file-stats manifest store (VERDICT r10 item 4 — the docstring's
@@ -1370,11 +1340,12 @@ def ivfpq_topk_refined_pruned(
     (`sources/manifest.read_pruned_ids` — one bisect of the sorted
     candidate ids per file, never a single loose (lo, hi) envelope).
 
-    The candidate id set is Q × refine_from rows — bounded,
-    model-sized — so collecting it to drive the listing-time prune is
-    the cheap side of the trade: at 100 TB the vector store is millions
-    of files, and the prune turns the exact fetch from "open every
-    footer" into "open the handful of files the candidates live in".
+    The candidate id set is Q × refine_from rows — model-sized, and
+    collected under the MAX_DRIVER_ROWS bound — so collecting it to
+    drive the listing-time prune is the cheap side of the trade: at
+    100 TB the vector store is millions of files, and the prune turns
+    the exact fetch from "open every footer" into "open the handful of
+    files the candidates live in".
     Returns (result, kept_files, total_files) so callers and tests can
     assert the skip rate; result hash-equals the in-memory
     `ivfpq_topk_refined` over the same store content."""
@@ -1384,22 +1355,16 @@ def ivfpq_topk_refined_pruned(
     )
 
     spark = queries.sparkSession
-    # ONE action materializes the candidate set (round 12, guide §1.2):
-    # the collected Q × refine_from pairs drive the listing-time prune
-    # AND come back as a LocalRelation for the rerank join — the
-    # round-11 shape paid a localCheckpoint action (full ADC run) plus
-    # a second distinct+collect job over the pinned frame for the same
-    # information. The candidate set is bounded/model-sized by the
-    # refine contract, so holding it on the driver is the cheap side
-    # of the trade at any scale.
-    cand_df = ivfpq_topk(queries, coarse, book, codes, id_col, vec_col,
-                         m=m, k=refine_from, nprobe=nprobe) \
-        .select("query_id", "match_id")
-    rows = cand_df.collect()
-    ids = sorted({r["match_id"] for r in rows})
-    cands = spark.createDataFrame(rows, cand_df.schema)
+    # ONE action materializes the candidate set: the collected
+    # Q × refine_from pairs drive the listing-time prune AND come back
+    # as a LocalRelation for the rerank join.
+    cands = _model_table(
+        ivfpq_topk(queries, coarse, book, codes, id_col, vec_col,
+                   m=m, k=refine_from, nprobe=nprobe),
+        ("query_id", "match_id"), "ivfpq_topk_refined_pruned")
+    ids = sorted(set(cands.column("match_id").to_pylist()))
     vecs, kept = read_pruned_ids(spark, vector_store_path, id_col, ids)
-    out = _exact_rerank(cands, queries,
+    out = _exact_rerank(_model_frame(spark, cands), queries,
                         vecs.select(id_col, vec_col),
                         id_col, vec_col, k)
     return out, kept, len(_data_files(str(vector_store_path)))

@@ -7356,6 +7356,7 @@ def q99zj_recall_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
         y = rotate_vectors(e, "vec_id", "embedding", rot)
         codes = pq_encode(y, book, "vec_id", "embedding", m=m,
                           folded=False)
+        book = spark.createDataFrame(book)
         recon = (
             codes.join(F.broadcast(book),
                        (codes["sub_idx"] == book["sub_idx"])

@@ -21,7 +21,8 @@ Layout under `index_root`:
                          TOUCHED buckets' sidecars and meta stays
                          O(buckets))
     coarse/              parquet — kc coarse centroid rows (the model)
-    book/                parquet — m x k PQ codebook rows (the model)
+    book/                parquet — m x k PQ codebook rows (the model);
+                         both written and read on the driver by pyarrow
     codes/bucket=<b>/    parquet — (id, sub_idx, code) PARTITIONED BY
                          the coarse bucket id; appends add files, never
                          rewrite
@@ -54,7 +55,12 @@ Why this shape at 100 TB:
 - The models (kc x dim centroids + m x k codebook) are broadcast-sized
   and IMMUTABLE once trained — appending a shard never retrains, so the
   whole index stays consistent: every code in every shard was produced
-  by the same folded encode expression.
+  by the same folded encode expression. They live on the driver as
+  pyarrow Tables, the model value the trainers return
+  (`operators/similarity.py`): a save writes each with
+  `pq.write_table`, a load reads it back with `pq.read_table`, and no
+  Spark job touches either. A missing or unreadable model file fails
+  the load with an error naming its path.
 - Codes are hive-partitioned by the coarse bucket id, so a search with
   nprobe << kc reads ONLY the probed buckets' files (partition
   pruning) — the scan cost tracks nprobe/kc of the index, matching the
@@ -82,6 +88,8 @@ import os
 import shutil
 import sys
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -509,8 +517,8 @@ def expire_superseded(index_root: str,
 
 def save_ann_index(
     index_root: str,
-    coarse: DataFrame,
-    book: DataFrame,
+    coarse: pa.Table,
+    book: pa.Table,
     codes: DataFrame,
     id_col: str,
     vec_col: str,
@@ -521,7 +529,8 @@ def save_ann_index(
     opq_iters: int = 0,
     sweep_grace_seconds: float = 0.0,
 ) -> None:
-    """Persist a trained IVFPQ index (the `ivfpq_fit` triple). Replaces
+    """Persist a trained IVFPQ index (the `ivfpq_fit` triple: two model
+    tables and the codes frame). Replaces
     any index already at `index_root` ATOMICALLY: the new index is fully
     materialized under a tmp sibling, the old dir renamed aside, the tmp
     renamed in, and only then is the old copy deleted (the
@@ -537,42 +546,13 @@ def save_ann_index(
                             opq_iters, sweep_grace_seconds)
 
 
-_MODEL_ARROW_TYPES = {
-    "bigint": "int64", "int": "int32", "double": "float64",
-    "string": "string", "array<double>": "list<float64>",
-}
-
-
-def _write_model_parquet(df: DataFrame, path: str) -> None:
-    """Persist a MODEL frame (kc×dim centroids / m×k codebook) as one
-    parquet file. Trainer outputs carry their rows as a stash
-    (`kmeans_fit`/`pq_fit`), so the write runs driver-side via pyarrow
-    — zero Spark jobs, zero commit protocol — with the arrow schema
-    derived from the frame's own dtypes so a reload sees the exact
-    types a Spark write would have produced (guide §1.2: a model write
-    is model-sized work; the two per-save actions it replaces were
-    pure fixed cost). Frames without a stash, or with dtypes outside
-    the model vocabulary, take the Spark write path unchanged."""
-    rows = getattr(df, "_model_rows", None)
-    if rows is not None and all(t in _MODEL_ARROW_TYPES
-                                for _, t in df.dtypes):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        def arrow_t(t: str):
-            return (pa.list_(pa.float64()) if t == "array<double>"
-                    else getattr(pa, _MODEL_ARROW_TYPES[t])())
-
-        cols = df.columns
-        data = [dict(zip(cols, r)) if not isinstance(r, dict) else r
-                for r in rows]
-        table = pa.table(
-            {c: pa.array([d[c] for d in data], type=arrow_t(t))
-             for (c, t) in df.dtypes})
-        os.makedirs(path, exist_ok=True)
-        pq.write_table(table, os.path.join(path, "part-00000.parquet"))
-        return
-    df.write.parquet(path)
+def _write_model_parquet(model: pa.Table, path: str) -> None:
+    """Persist a model table (kc×dim centroids / m×k codebook) as one
+    parquet file, written on the driver: no Spark job and no commit
+    protocol for model-sized data. Spark reads it back with the dtypes
+    a Spark write of `createDataFrame(model)` has."""
+    os.makedirs(path)
+    pq.write_table(model, os.path.join(path, "part-00000.parquet"))
 
 
 def _save_locked(root, coarse, book, codes, id_col, vec_col, m,
@@ -944,63 +924,25 @@ def _corpus_cols(corpus: DataFrame, root: str) -> tuple[str, str]:
     return idc, vec
 
 
-def _read_model_rows(path: str):
-    """Driver-side read of a persisted MODEL dir (kc×dim coarse table /
-    m×k codebook — one small parquet file from `_write_model_parquet`,
-    or a handful from a legacy Spark write) into pyspark Rows, or None
-    when anything about the layout is unexpected. Model-sized work by
-    construction — the symmetric read of the driver-side model write
-    (round 12, guide §1.2): consumers that fold the model into scan
-    expressions (`ivfpq_topk`, `ivf_probe_buckets`, `encode_shard`'s
-    residual/code folds) get their rows without a Spark job per
-    consumer."""
-    try:
-        import pyarrow.parquet as pq
-        from pyspark.sql import Row
-
-        files = [os.path.join(path, f) for f in sorted(os.listdir(path))
-                 if f.endswith(".parquet") and not f.startswith((".", "_"))]
-        if not files:
-            return None
-        tables = [pq.read_table(f) for f in files]
-        tbl = tables[0] if len(tables) == 1 else \
-            tables[0].from_batches(
-                [b for t in tables for b in t.to_batches()],
-                schema=tables[0].schema)
-        cols = tbl.column_names
-        make = Row(*cols)
-        return [make(*[d[c] for c in cols]) for d in tbl.to_pylist()]
-    except Exception:
-        return None  # fall back to collect-on-demand
-
-
-def _load_models(
-    spark: SparkSession, root: str,
-) -> tuple[DataFrame, DataFrame, dict]:
+def _load_models(root: str) -> tuple[pa.Table, pa.Table, dict]:
     """(coarse, book, meta) only — no codes frame. The append path and
     the search path's probe stage use this: constructing the codes
     DataFrame builds a driver-side file index over every committed
     code file (at 100 TB: a listing of the whole index), while the
-    models are two one-file broadcast-sized parquet reads. Both crash
+    models are two small driver-side parquet reads. Both crash
     windows heal here, same as the full load.
 
-    Round 12: the model ROWS are additionally read driver-side via
-    pyarrow and stashed on the returned frames (`_model_rows`, the
-    trainer-output contract), so every folded consumer — append's
-    encode, search's probe and ADC stages — skips its per-consumer
-    collect job; the frames themselves stay lazy parquet reads for
-    any caller that wants the DataFrame."""
+    The models come back as pyarrow Tables, the same model value the
+    trainers return, so every folded consumer — append's encode,
+    search's probe and ADC stages — uses them without a Spark job.
+    `pq.read_table` also reads the multi-file model directories that
+    older indexes wrote with Spark. A missing or truncated model file
+    raises (FileNotFoundError / pyarrow.ArrowInvalid) naming the path."""
     _repair_root(root)
     _repair_compaction(root)
     meta = _read_meta(root)
-    coarse = spark.read.parquet(os.path.join(root, "coarse"))
-    book = spark.read.parquet(os.path.join(root, "book"))
-    coarse_rows = _read_model_rows(os.path.join(root, "coarse"))
-    if coarse_rows is not None:
-        coarse._model_rows = coarse_rows
-    book_rows = _read_model_rows(os.path.join(root, "book"))
-    if book_rows is not None:
-        book._model_rows = book_rows
+    coarse = pq.read_table(os.path.join(root, "coarse"))
+    book = pq.read_table(os.path.join(root, "book"))
     return coarse, book, meta
 
 
@@ -1036,9 +978,10 @@ def _load_codes(spark: SparkSession, root: str, meta: dict,
 
 def load_ann_index(
     spark: SparkSession, index_root: str,
-) -> tuple[DataFrame, DataFrame, DataFrame, dict]:
-    """(coarse, book, codes, meta) from a persisted index. The codes
-    frame keeps its hive bucket partitioning, so `bucket` filters prune
+) -> tuple[pa.Table, pa.Table, DataFrame, dict]:
+    """(coarse, book, codes, meta) from a persisted index: the two
+    models as pyarrow Tables (`_load_models`), codes as a DataFrame
+    that keeps its hive bucket partitioning, so `bucket` filters prune
     at the file level. Both crash windows heal here — the save swap's
     rename gap and (legacy indexes) compaction's per-bucket rename gap —
     so a search-only deployment never silently reads a partial index.
@@ -1050,7 +993,7 @@ def load_ann_index(
     sees the index at a whole number of committed shards. Legacy
     indexes without a manifest fall back to the directory read."""
     root = str(index_root)
-    coarse, book, meta = _load_models(spark, root)
+    coarse, book, meta = _load_models(root)
     return coarse, book, _load_codes(spark, root, meta), meta
 
 
@@ -1070,7 +1013,7 @@ def _apply_rotation(df: DataFrame, meta: dict) -> DataFrame:
 
 
 def encode_shard(
-    shard: DataFrame, coarse: DataFrame, book: DataFrame,
+    shard: DataFrame, coarse: pa.Table, book: pa.Table,
     id_col: str, vec_col: str,
 ) -> DataFrame:
     """(id, bucket, sub_idx, code) for a shard against loaded models —
@@ -1241,7 +1184,7 @@ def _append_stage(
     # Models only (round 11): the encode needs coarse/book/meta, and
     # building the unused codes frame cost a driver-side file index
     # over the whole committed file list per append.
-    coarse, book, meta = _load_models(spark, root)
+    coarse, book, meta = _load_models(root)
     _ensure_manifest(root, meta)   # legacy index: snapshot dir state
     _sweep_uncommitted(root, meta)  # crash debris / superseded files
     shard = _apply_rotation(shard, meta)  # OPQ indexes store rotated codes
@@ -1299,7 +1242,7 @@ def ann_index_search(
     covered; a straggler should simply retry. Never corruption or data
     loss: every committed manifest is complete."""
     root = str(index_root)
-    coarse, book, meta = _load_models(spark, root)
+    coarse, book, meta = _load_models(root)
     id_col, vec_col, m = meta["id_col"], meta["vec_col"], meta["m"]
     # OPQ indexes live in the rotated space; orthonormal R preserves
     # euclidean distances, so rotating the (few) queries is the entire

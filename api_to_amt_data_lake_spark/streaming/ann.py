@@ -122,7 +122,7 @@ def _dedupe_locked(spark: SparkSession, index_root: str) -> int:
     codes_dir = os.path.join(root, "codes")
     tmp = os.path.join(root, ".dedupe_tmp")
     shutil.rmtree(tmp, ignore_errors=True)  # crash debris of a prior run
-    coarse, book, codes, meta = load_ann_index(spark, root)
+    *_, codes, meta = load_ann_index(spark, root)
     _ensure_manifest(root, meta)    # legacy index: snapshot dir state
     _sweep_uncommitted(root, meta)  # crash debris / superseded files
     before = codes.count()

@@ -674,11 +674,12 @@ def test_concurrent_writer_fails_fast(spark, tmp_path):
 
 
 def test_model_parquet_driver_write_matches_spark_write(spark, tmp_path):
-    """Round-11 internals: trainer outputs carry a `_model_rows` stash
-    and `save_ann_index` writes the model frames driver-side via
-    pyarrow. The driver-written parquet must reload with the exact
-    schema AND rows a Spark write of the same frame produces, for both
-    stash shapes (Row-list centroids, dict-list codebook)."""
+    """`save_ann_index` writes the trainers' model tables on the driver
+    via pyarrow. Reloaded through Spark, the file must have the dtypes
+    and rows of a Spark write of `createDataFrame(table)`, for both
+    model shapes (centroids, codebook). `toArrow` marks fields not
+    null, so the arrow schemas differ in nullability; Spark dtypes are
+    what a reader sees."""
     from api_to_amt_data_lake_spark.operators.similarity import (
         kmeans_fit,
         pq_fit,
@@ -691,12 +692,11 @@ def test_model_parquet_driver_write_matches_spark_write(spark, tmp_path):
     coarse = kmeans_fit(e, "vec_id", "embedding", k=4, iters=2)
     book = pq_fit(e, "vec_id", "embedding", m=2, k=4, iters=2)
     for name, model in (("coarse", coarse), ("book", book)):
-        assert getattr(model, "_model_rows", None) is not None
         drv, spk = str(tmp_path / f"{name}_drv"), str(tmp_path / f"{name}_spk")
         _write_model_parquet(model, drv)
         # No Spark commit artifacts: the write never ran a Spark job.
         assert not os.path.exists(os.path.join(drv, "_SUCCESS"))
-        model.write.parquet(spk)
+        spark.createDataFrame(model).write.parquet(spk)
         got, want = spark.read.parquet(drv), spark.read.parquet(spk)
         assert got.dtypes == want.dtypes, name
         key = lambda r: tuple(  # noqa: E731
@@ -705,20 +705,36 @@ def test_model_parquet_driver_write_matches_spark_write(spark, tmp_path):
             sorted(map(key, want.collect())), name
 
 
-def test_model_parquet_stashless_frame_falls_back_to_spark(spark, tmp_path):
-    """A frame without the trainer stash (e.g. models re-read from a
-    persisted index at rebuild time) takes the plain Spark write."""
-    from api_to_amt_data_lake_spark.sources.ann_index import (
-        _write_model_parquet,
-    )
+def test_unreadable_model_raises_naming_path(spark, index_root, tmp_path):
+    """A truncated coarse file or a missing book dir fails the load and
+    the search with an error naming the path — never a silent fallback
+    to some other read."""
+    import re
+    import shutil
 
-    df = spark.range(3).select(F.col("id").alias("vec_id"),
-                               F.array(F.lit(1.0), F.lit(2.0))
-                               .alias("embedding"))
-    out = str(tmp_path / "fallback")
-    _write_model_parquet(df, out)
-    assert os.path.exists(os.path.join(out, "_SUCCESS"))  # Spark wrote it
-    assert spark.read.parquet(out).count() == 3
+    import pyarrow as pa
+
+    q = _emb(spark).filter(F.col("vec_id") < 3)
+    root = str(tmp_path / "idx")
+    shutil.copytree(index_root, root)
+    coarse_dir = os.path.join(root, "coarse")
+    (part,) = [os.path.join(coarse_dir, n) for n in os.listdir(coarse_dir)
+               if n.endswith(".parquet")]
+    with open(part, "r+b") as f:
+        f.truncate(os.path.getsize(part) // 2)
+    with pytest.raises(pa.ArrowInvalid, match=re.escape(part)):
+        load_ann_index(spark, root)
+    with pytest.raises(pa.ArrowInvalid, match=re.escape(part)):
+        ann_index_search(spark, root, q, k=3, nprobe=1)
+
+    root2 = str(tmp_path / "idx2")
+    shutil.copytree(index_root, root2)
+    book_dir = os.path.join(root2, "book")
+    shutil.rmtree(book_dir)
+    with pytest.raises(FileNotFoundError, match=re.escape(book_dir)):
+        load_ann_index(spark, root2)
+    with pytest.raises(FileNotFoundError, match=re.escape(book_dir)):
+        ann_index_search(spark, root2, q, k=3, nprobe=1)
 
 
 def test_search_listing_bounded_by_probed_buckets(spark, index_root):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from api_to_amt_data_lake_spark.operators.dedup import (
@@ -151,7 +152,7 @@ def test_kmeans_fit_separates_clear_clusters(spark):
            [(10 + i, [10.0 + i * 0.01, 10.0]) for i in range(5)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cent = kmeans_fit(df, "vec_id", "embedding", k=2, iters=4)
-    assert cent.count() == 2
+    assert cent.num_rows == 2
 
     assign = ivf_assign(df, cent, "vec_id", "embedding")
     got = {r["vec_id"]: r["bucket"] for r in assign.collect()}
@@ -169,7 +170,7 @@ def test_kmeans_fit_always_returns_k_centroids(spark):
     rows = [(i, [0.0, 0.0]) for i in range(5)] + [(9, [9.0, 9.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cent = kmeans_fit(df, "vec_id", "embedding", k=2, iters=3)
-    got = {r["vec_id"]: r["embedding"] for r in cent.collect()}
+    got = {r["vec_id"]: r["embedding"] for r in cent.to_pylist()}
     assert len(got) == 2
     assert sorted(got.values()) == [[0.0, 0.0], [9.0, 9.0]]
 
@@ -610,14 +611,14 @@ def test_keyed_trainer_matches_per_subspace_kmeans(spark):
     keyed = {
         (r["sub_idx"], r["cent_id"]): [round(v, 9) for v in r["centroid"]]
         for r in pq_fit(df, "vec_id", "embedding", m=m, k=k,
-                        iters=iters, cache=False).collect()
+                        iters=iters, cache=False).to_pylist()
     }
     per_sub = {}
     for j in range(m):
         sub = df.select("vec_id",
                         _subvector("embedding", j, m).alias("embedding"))
         for r in kmeans_fit(sub, "vec_id", "embedding",
-                            k=k, iters=iters).collect():
+                            k=k, iters=iters).to_pylist():
             per_sub[(j, r["vec_id"])] = [round(v, 9) for v in r["embedding"]]
     assert keyed == per_sub and len(keyed) == m * k
 
@@ -688,6 +689,30 @@ def test_ivfpq_kc1_matches_plain_pq_on_residuals(spark):
     assert got == want and len(got) == 9
 
 
+def test_model_conversion_over_driver_bound_raises(spark):
+    """A frame passed where a model belongs is collected under
+    MAX_DRIVER_ROWS: at the bound it converts, one row over it raises
+    naming the operator instead of collecting the frame."""
+    from api_to_amt_data_lake_spark.operators.similarity import (
+        MAX_DRIVER_ROWS,
+        _model_table,
+        ivf_topk,
+    )
+
+    def frame(n):
+        return spark.range(n).select(
+            F.col("id").alias("vec_id"),
+            F.array(F.lit(1.0), F.lit(0.0)).alias("embedding"))
+
+    cols = ("vec_id", "embedding")
+    assert _model_table(frame(MAX_DRIVER_ROWS), cols, "t").num_rows \
+        == MAX_DRIVER_ROWS
+    q = frame(2)
+    with pytest.raises(ValueError, match="ivf_topk"):
+        ivf_topk(q, q, frame(MAX_DRIVER_ROWS + 1), "vec_id", "embedding",
+                 k=1)
+
+
 def test_ivfpq_recall_within_clusters(spark):
     """Well-separated clusters: every IVFPQ top-k match must come from
     the query's own cluster (the coarse quantizer scopes the search and
@@ -730,8 +755,7 @@ def test_sampled_fit_equals_manual_filter(spark):
     manual = kmeans_fit(
         df.filter(hash_bucket("vec_id") < int(0.5 * _M32)),
         "vec_id", "embedding", k=4, iters=2)
-    assert sorted(map(tuple, sampled.collect())) \
-        == sorted(map(tuple, manual.collect()))
+    assert sampled.sort_by("vec_id").equals(manual.sort_by("vec_id"))
     # The sample is a real subset, not a no-op.
     n_kept = df.filter(hash_bucket("vec_id") < int(0.5 * _M32)).count()
     assert 0 < n_kept < 60

@@ -66,6 +66,7 @@ def test_folded_reconstruction_matches_codebook_join(spark):
         _folded_pq_recon_expr("embedding", book).alias("yh")).collect()
     # Independent path: explicit encode + join + assemble.
     codes = pq_encode(df, book, "vec_id", "embedding", m=2, folded=True)
+    book = spark.createDataFrame(book)
     joined = (
         codes.join(book, (codes.sub_idx == book.sub_idx)
                    & (codes.code == book.cent_id))

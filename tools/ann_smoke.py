@@ -106,13 +106,13 @@ def main() -> None:
     t0 = time.time()
     cents = kmeans_fit(corpus, "vec_id", "embedding", k=16, iters=2,
                        sample_frac=0.1)
-    rows["ivf_fit"] = cents.count()
+    rows["ivf_fit"] = cents.num_rows
     t["ivf_fit"] = round(time.time() - t0, 2)
 
     t0 = time.time()
-    # Post-training IVFPQ passes, both FOLDED (model collected into the
-    # scan): residual projection, then code assignment — zero corpus
-    # shuffles, the 100 TB index-build path.
+    # Post-training IVFPQ passes, both FOLDED (the driver-side model
+    # tables become scan literals): residual projection, then code
+    # assignment — zero corpus shuffles, the 100 TB index-build path.
     res = ivf_residuals(corpus, cents, "vec_id", "embedding",
                         folded=True).localCheckpoint()
     rows["ivfpq_residual"] = res.count()
@@ -121,7 +121,7 @@ def main() -> None:
     t0 = time.time()
     book = pq_fit(res.select("vec_id", "embedding"), "vec_id",
                   "embedding", m=4, k=8, iters=2, sample_frac=0.1)
-    rows["ivfpq_book"] = book.count()
+    rows["ivfpq_book"] = book.num_rows
     t["ivfpq_book"] = round(time.time() - t0, 2)
 
     t0 = time.time()
