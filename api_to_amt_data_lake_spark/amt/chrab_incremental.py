@@ -23,10 +23,10 @@ q99zy) into the view's own aggregation state:
   filters, flags) is recomputed ONLY for the output keys the fold
   touched (`assemble(..., touched=...)` — a broadcast semi join whose
   key set the runtime bloom filter pushes into the silver scans), then
-  spliced into the existing gold parquet with a broadcast anti join
-  (the `amt/incremental_gold.py` swap discipline).
+  spliced into the touched DateKey partitions of the existing gold
+  (`amt/incremental_gold.py` owns the splice and the commit order).
 
-Contract (the test `tests/test_incremental_gold.py` pins it): after any
+Contract (the test `tests/test_chrab_incremental.py` pins it): after any
 sequence of attendance-event inserts/updates/deletes followed by
 `refresh(...)`, the gold parquet is row-identical to a full
 `build(...)` of the view over the current silver.
@@ -58,11 +58,21 @@ from api_to_amt_data_lake_spark.amt.chrab.chronic_absenteeism_attendance_fact im
     CONTRACT,
     assemble,
 )
+from api_to_amt_data_lake_spark.amt import incremental_gold
+from api_to_amt_data_lake_spark.amt.incremental_gold import (
+    diff_snapshot,
+    gold_path,
+    repair_all,
+    splice_dates,
+    splice_ready,
+    stage_state,
+    state_paths,
+)
 from api_to_amt_data_lake_spark.functions.dates import date_key
 from api_to_amt_data_lake_spark.operators.delta_agg import fold_grouped_sums
-from api_to_amt_data_lake_spark.sources.incremental import frame_changes
 from api_to_amt_data_lake_spark.sources.json_source import read_collection
 from api_to_amt_data_lake_spark.sources.lookup import with_descriptor_constant
+from api_to_amt_data_lake_spark.sources.parquet_io import commit, swap_write
 
 VIEW_NAME = CONTRACT.name
 
@@ -150,47 +160,6 @@ def _read_events(spark, silver_root, school_year, side):
     return event_indicators(ev, school_col, year_col)
 
 
-def _swap_write(df: DataFrame, path: str) -> None:
-    """Write-to-temp + rename (Spark cannot overwrite a path it is
-    reading; same discipline as `incremental_gold.refresh_view_incremental`)."""
-    tmp, old = path + ".swap-tmp", path + ".swap-old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    df.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _paths(state_root: str, side: str) -> tuple[str, str]:
-    return (os.path.join(state_root, f"{side}_state"),
-            os.path.join(state_root, f"{side}_snap"))
-
-
-def _repair_swap(path: str) -> None:
-    """Heal the rename-swap crash window: a crash between 'move live
-    aside' and 'move staged in' leaves the live dir missing with its
-    content intact at `.swap-old`. Restoring it keeps the refresh
-    incremental (the expensive alternative — the missing-state
-    full_build fallback — stays as the backstop for genuinely lost
-    state)."""
-    old = path + ".swap-old"
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-
-
-def _repair_all(state_root: str, gold: str) -> None:
-    for side in _SIDES:
-        for p in _paths(state_root, side):
-            _repair_swap(p)
-    _repair_swap(gold)
-
-
-def _gold_path(gold_root: str, school_year) -> str:
-    return os.path.join(gold_root, str(school_year), VIEW_NAME)
-
-
 def full_build(spark: SparkSession, silver_root: str,
                school_year: str | int, state_root: str, gold_root: str,
                run_date: str | None = None) -> str:
@@ -201,22 +170,22 @@ def full_build(spark: SparkSession, silver_root: str,
     counts = {}
     for side in _SIDES:
         ind = _read_events(spark, silver_root, school_year, side)
-        state_path, snap_path = _paths(state_root, side)
+        state_path, snap_path = state_paths(state_root, side)
         if ind is None:
             shutil.rmtree(state_path, ignore_errors=True)
             shutil.rmtree(snap_path, ignore_errors=True)
             counts[side] = None
             continue
-        _swap_write(ind, snap_path)
+        swap_write(ind, snap_path)
         snap = spark.read.parquet(snap_path)
-        _swap_write(init_state(snap), state_path)
+        swap_write(init_state(snap), state_path)
         counts[side] = counts_from_state(
             spark.read.parquet(state_path), side)
 
     ssa = read_collection(spark, silver_root, school_year,
                           "studentSchoolAssociations")
     cal = read_collection(spark, silver_root, school_year, "calendarDates")
-    gold = _gold_path(gold_root, school_year)
+    gold = gold_path(gold_root, school_year, VIEW_NAME)
     if ssa is None or cal is None or "calendarEvents" not in cal.columns:
         view = CONTRACT.empty(spark)
     else:
@@ -224,34 +193,18 @@ def full_build(spark: SparkSession, silver_root: str,
                         run_date)
     os.makedirs(os.path.dirname(gold), exist_ok=True)
     # Gold is hive-partitioned by DateKey: real attendance churn is
-    # DATE-CLUSTERED (events land for recent days), so the splice can
-    # rewrite only the touched date partitions instead of copying the
-    # whole view — the Delta/Iceberg dynamic-partition-overwrite shape
-    # on plain parquet, closing the "splice is O(gold)" flat-layout
-    # cost SCALE.md called the irreducible term.
-    tmp = gold + ".swap-tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(gold + ".swap-old", ignore_errors=True)
-    (view.repartition(F.col("DateKey"))
-     .write.partitionBy("DateKey").parquet(tmp))
-    old = gold + ".swap-old"
-    if os.path.exists(gold):
-        os.rename(gold, old)
-    os.rename(tmp, gold)
-    shutil.rmtree(old, ignore_errors=True)
+    # DATE-CLUSTERED (events land for recent days), so the refresh
+    # rewrites only the touched date partitions (`splice_dates`).
+    swap_write(view, gold, partition_by="DateKey")
     return gold
 
 
 def read_gold(spark: SparkSession, gold_root: str,
               school_year: str | int) -> DataFrame:
     """Read the maintained gold back in CONTRACT column order and
-    types. The explicit schema keeps the DateKey PARTITION column a
-    string (type inference would int-ify 'yyyymmdd' values — and the
-    session-wide inference flag can't be flipped without breaking the
-    bucket store's int `_bkt` reads); conform restores exact order."""
-    df = spark.read.schema(CONTRACT.schema()).parquet(
-        _gold_path(gold_root, school_year))
-    return CONTRACT.conform(df, spark)
+    types (`incremental_gold.read_gold`)."""
+    return incremental_gold.read_gold(
+        spark, gold_path(gold_root, school_year, VIEW_NAME), CONTRACT)
 
 
 def _touched_keys(changes: DataFrame) -> DataFrame:
@@ -282,15 +235,14 @@ def refresh(spark: SparkSession, silver_root: str,
     states (q99zy's verified algebra), recompute ONLY the touched
     output rows, splice them into gold. Returns per-side change counts
     (all zero = gold untouched). Falls back to `full_build` when the
-    state or gold has never been materialized."""
-    gold = _gold_path(gold_root, school_year)
-    _repair_all(state_root, gold)  # prior-crash rename-swap leftovers
+    state or the partitioned gold has never been materialized."""
+    gold = gold_path(gold_root, school_year, VIEW_NAME)
+    repair_all(gold, state_root, _SIDES)
     inds = {side: _read_events(spark, silver_root, school_year, side)
             for side in _SIDES}
-    sides_ready = all(
-        all(os.path.exists(p) for p in _paths(state_root, s))
-        for s, ind in inds.items() if ind is not None)
-    if not os.path.exists(gold) or not sides_ready:
+    required = [p for s, ind in inds.items() if ind is not None
+                for p in state_paths(state_root, s)]
+    if not splice_ready(gold, required):
         full_build(spark, silver_root, school_year, state_root,
                    gold_root, run_date)
         return {"full_build": True}
@@ -298,53 +250,18 @@ def refresh(spark: SparkSession, silver_root: str,
     stats: dict = {"full_build": False}
     touched_parts = []
     new_states = {}
-    pending = []  # (staged_dir, live_dir) renames, applied post-splice
+    pending: list = []  # (staged, live) dirs, committed after the splice
     for side in _SIDES:
-        state_path, snap_path = _paths(state_root, side)
-        ind = inds[side]
-        has_snap = os.path.exists(snap_path)
-        if ind is None and not has_snap:
-            new_states[side] = None
-            stats[side] = 0
-            continue
-        snap = (spark.read.parquet(snap_path) if has_snap
-                else ind.limit(0))
-        # Stage the current indicators as parquet FIRST — the silver
-        # JSON is scanned exactly once per refresh; the diff and the
-        # post-splice snapshot commit both read the staged copy.
-        if ind is not None:
-            nxt_snap = snap_path + ".next"
-            shutil.rmtree(nxt_snap, ignore_errors=True)
-            ind.write.parquet(nxt_snap)
-            cur = spark.read.parquet(nxt_snap)
-        else:
-            nxt_snap = None
-            cur = snap.limit(0)
-        changes = frame_changes(
-            snap, cur, "_k", compare_cols=_GROUP + _SUMS,
-            include_old=True,
-        ).localCheckpoint()  # diff reused 3× (fold, touched, count)
-        n = changes.count()
-        stats[side] = n
+        state_path, snap_path = state_paths(state_root, side)
+        changes, stats[side], _ = diff_snapshot(
+            spark, inds[side], snap_path, pending)
         state = spark.read.parquet(state_path) if os.path.exists(
             state_path) else None
-        if n:
-            # Stage the folded state beside the live one (the fold
-            # reads the live path) and commit by rename post-splice.
-            nxt_state = state_path + ".next"
-            shutil.rmtree(nxt_state, ignore_errors=True)
-            fold_grouped_sums(state, changes, _GROUP, _SUMS) \
-                .write.parquet(nxt_state)
-            new_state = spark.read.parquet(nxt_state)
+        if stats[side]:
+            state = stage_state(spark, fold_grouped_sums(
+                state, changes, _GROUP, _SUMS), state_path, pending)
             touched_parts.append(_touched_keys(changes))
-            pending.append((nxt_state, state_path))
-            if nxt_snap is not None:
-                pending.append((nxt_snap, snap_path))
-        else:
-            new_state = state
-            if nxt_snap is not None:
-                shutil.rmtree(nxt_snap, ignore_errors=True)
-        new_states[side] = new_state
+        new_states[side] = state
 
     if not touched_parts:
         return stats
@@ -373,75 +290,7 @@ def refresh(spark: SparkSession, silver_root: str,
     }
     recomputed = assemble(spark, ssa, cal, counts["sch"], counts["sec"],
                           run_date, touched=touched)
-    # NULL-key gold rows are invariant under event CDC (an event with a
-    # NULL group key can never equi-join a base row), so the plain-
-    # equality anti join leaving them untouched is exactly right.
-    tk_gold = F.broadcast(
-        touched.select(
-            "StudentKey", "SchoolKey",
-            F.substring(F.regexp_replace("_date", "-", ""), 1, 8)
-            .alias("DateKey")))
-    partitioned = any(
-        d.startswith("DateKey=") for d in os.listdir(gold))
-    if partitioned:
-        # DATE-PARTITIONED SPLICE: real churn is date-clustered, so
-        # only the touched DateKey partitions are read (partition
-        # pruning via the explicit-schema read) and rewritten; every
-        # other date's files are never opened. A crash between the
-        # per-partition swaps is healed by re-running the refresh: the
-        # snapshots commit after gold, so the same changes re-detect
-        # and the recompute is idempotent.
-        tdates = sorted({
-            r[0] for r in touched.select(
-                F.substring(F.regexp_replace("_date", "-", ""), 1, 8)
-                .alias("dk")).distinct().collect()
-            if r[0] is not None})
-        stats["touched_dates"] = len(tdates)
-        gold_df = spark.read.schema(CONTRACT.schema()).parquet(gold)
-        carried_t = (
-            gold_df.filter(F.col("DateKey").isin(tdates))
-            .join(tk_gold, ["StudentKey", "SchoolKey", "DateKey"],
-                  "left_anti")
-        )
-        out = carried_t.unionByName(recomputed) \
-            .select(*CONTRACT.columns)
-        stage = gold + ".stage"
-        shutil.rmtree(stage, ignore_errors=True)
-        (out.repartition(F.col("DateKey"))
-         .write.partitionBy("DateKey").parquet(stage))
-        for dk in tdates:
-            src = os.path.join(stage, f"DateKey={dk}")
-            dst = os.path.join(gold, f"DateKey={dk}")
-            old = dst + ".swap-old"
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(dst):
-                os.rename(dst, old)
-            if os.path.exists(src):
-                os.rename(src, dst)
-            shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-    else:
-        # Legacy flat layout: full-copy splice (the pre-r11 shape).
-        carried = (
-            spark.read.parquet(gold)
-            .join(tk_gold, ["StudentKey", "SchoolKey", "DateKey"],
-                  "left_anti")
-        )
-        # The anti join moves its keys to the front; restore contract
-        # order so the spliced gold stays positionally identical to a
-        # full build (downstream exceptAll/diff checks are positional).
-        _swap_write(carried.unionByName(recomputed)
-                    .select(*CONTRACT.columns), gold)
-    # Commit states and snapshots by rename. A crash between the gold
-    # swap and these renames is safe: the next refresh re-diffs against
-    # the OLD snapshot, re-detects the same changes, and re-splices the
-    # identical recomputed rows (the recompute is idempotent — gold
-    # rows for a touched key are fully replaced, never accumulated).
-    for staged, live in pending:
-        old = live + ".swap-old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(live):
-            os.rename(live, old)
-        os.rename(staged, live)
-        shutil.rmtree(old, ignore_errors=True)
+    stats["touched_dates"] = splice_dates(spark, gold, CONTRACT,
+                                          recomputed, touched)
+    commit(pending)
     return stats

@@ -50,6 +50,16 @@ from api_to_amt_data_lake_spark.amt.ews.student_early_warning_fact import (
     assemble,
     section_day_flags,
 )
+from api_to_amt_data_lake_spark.amt import incremental_gold
+from api_to_amt_data_lake_spark.amt.incremental_gold import (
+    diff_snapshot,
+    gold_path,
+    repair_all,
+    splice_dates,
+    splice_ready,
+    stage_state,
+    state_paths,
+)
 from api_to_amt_data_lake_spark.operators.delta_agg import (
     delta_join_signed,
     fold_grouped_sums,
@@ -57,9 +67,9 @@ from api_to_amt_data_lake_spark.operators.delta_agg import (
     grouped_sums,
     signed_changes,
 )
-from api_to_amt_data_lake_spark.sources.incremental import frame_changes
 from api_to_amt_data_lake_spark.sources.json_source import read_collection
 from api_to_amt_data_lake_spark.sources.lookup import with_descriptor_constant
+from api_to_amt_data_lake_spark.sources.parquet_io import commit, swap_write
 
 VIEW_NAME = CONTRACT.name
 
@@ -249,26 +259,6 @@ def _per_day_from(sec_state: DataFrame, assoc: DataFrame) -> DataFrame:
 _SNAPS = ("sch", "sec", "assoc", "inc", "beh")
 
 
-def _paths(state_root: str, name: str) -> tuple[str, str]:
-    return (os.path.join(state_root, f"{name}_state"),
-            os.path.join(state_root, f"{name}_snap"))
-
-
-def _gold_path(gold_root: str, school_year) -> str:
-    return os.path.join(gold_root, str(school_year), VIEW_NAME)
-
-
-def _swap_write(df: DataFrame, path: str) -> None:
-    tmp, old = path + ".swap-tmp", path + ".swap-old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    df.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
 def _read_snapshots(spark, silver_root, school_year):
     """Current silver → the five id-keyed snapshot frames (None for a
     missing collection)."""
@@ -306,62 +296,49 @@ def full_build(spark: SparkSession, silver_root: str,
     snaps = _read_snapshots(spark, silver_root, school_year)
     mat = {}
     for name, df in snaps.items():
-        state_path, snap_path = _paths(state_root, name)
+        state_path, snap_path = state_paths(state_root, name)
         if df is None:
             shutil.rmtree(state_path, ignore_errors=True)
             shutil.rmtree(snap_path, ignore_errors=True)
             mat[name] = None
             continue
-        _swap_write(df, snap_path)
+        swap_write(df, snap_path)
         mat[name] = spark.read.parquet(snap_path)
     for name, group, sums in (("sch", _SCH_GROUP, _SCH_SUMS),
                               ("sec", _SEC_GROUP, _SCH_SUMS)):
         if mat[name] is None:
             continue
-        state_path, _ = _paths(state_root, name)
-        _swap_write(grouped_sums(mat[name].drop("_k"), group, sums),
-                    state_path)
+        swap_write(grouped_sums(mat[name].drop("_k"), group, sums),
+                   state_paths(state_root, name)[0])
+    disc_path = state_paths(state_root, "disc")[0]
     if mat["inc"] is not None and mat["beh"] is not None:
-        _swap_write(_disc_state_full(mat["inc"], mat["beh"]),
-                    _paths(state_root, "disc")[0])
+        swap_write(_disc_state_full(mat["inc"], mat["beh"]), disc_path)
     else:
-        shutil.rmtree(_paths(state_root, "disc")[0], ignore_errors=True)
+        shutil.rmtree(disc_path, ignore_errors=True)
 
-    gold = _gold_path(gold_root, school_year)
+    gold = gold_path(gold_root, school_year, VIEW_NAME)
     os.makedirs(os.path.dirname(gold), exist_ok=True)
-    # DateKey-partitioned gold, the chrab_incremental discipline: the
-    # splice rewrites only touched date partitions.
     view = _assemble_from_states(spark, silver_root, school_year,
                                  state_root, run_date)
-    tmp, old = gold + ".swap-tmp", gold + ".swap-old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    (view.repartition(F.col("DateKey"))
-     .write.partitionBy("DateKey").parquet(tmp))
-    if os.path.exists(gold):
-        os.rename(gold, old)
-    os.rename(tmp, gold)
-    shutil.rmtree(old, ignore_errors=True)
+    swap_write(view, gold, partition_by="DateKey")
     return gold
 
 
 def read_gold(spark: SparkSession, gold_root: str,
               school_year: str | int) -> DataFrame:
-    """Contract-ordered read of the maintained gold (explicit schema
-    keeps the DateKey partition column a string — see
-    chrab_incremental.read_gold)."""
-    df = spark.read.schema(CONTRACT.schema()).parquet(
-        _gold_path(gold_root, school_year))
-    return CONTRACT.conform(df, spark)
+    """Contract-ordered read of the maintained gold
+    (`incremental_gold.read_gold`)."""
+    return incremental_gold.read_gold(
+        spark, gold_path(gold_root, school_year, VIEW_NAME), CONTRACT)
 
 
 def _state(spark, state_root, name):
-    p = _paths(state_root, name)[0]
+    p = state_paths(state_root, name)[0]
     return spark.read.parquet(p) if os.path.exists(p) else None
 
 
 def _snap(spark, state_root, name):
-    p = _paths(state_root, name)[1]
+    p = state_paths(state_root, name)[1]
     return spark.read.parquet(p) if os.path.exists(p) else None
 
 
@@ -430,59 +407,25 @@ def refresh(spark: SparkSession, silver_root: str,
     recompute the per-day section max and the view rows for the
     touched (student, school, day) keys only, splice into gold.
     Returns per-source change counts; falls back to `full_build` when
-    state or gold has never been materialized."""
-    gold = _gold_path(gold_root, school_year)
-    # Heal prior-crash rename-swap leftovers (live dir missing, content
-    # at .swap-old — the chrab_incremental._repair_swap discipline) so
-    # a crash mid-commit stays incremental instead of forcing the
-    # missing-state full_build fallback.
-    from api_to_amt_data_lake_spark.amt.chrab_incremental import (
-        _repair_swap,
-    )
-    for name in _SNAPS + ("disc",):
-        for p in _paths(state_root, name):
-            _repair_swap(p)
-    _repair_swap(gold)
+    state or the partitioned gold has never been materialized."""
+    gold = gold_path(gold_root, school_year, VIEW_NAME)
+    repair_all(gold, state_root, _SNAPS + ("disc",))
     snaps_now = _read_snapshots(spark, silver_root, school_year)
-    ready = os.path.exists(gold) and all(
-        os.path.exists(_paths(state_root, n)[1])
-        for n, df in snaps_now.items() if df is not None)
-    if not ready:
+    required = [state_paths(state_root, n)[1]
+                for n, df in snaps_now.items() if df is not None]
+    if not splice_ready(gold, required):
         full_build(spark, silver_root, school_year, state_root,
                    gold_root, run_date)
         return {"full_build": True}
 
     stats: dict = {"full_build": False}
-    pending: list[tuple[str, str]] = []  # (staged, live) renames
+    pending: list = []  # (staged, live) dirs, committed after the splice
     diffs: dict[str, DataFrame | None] = {}
     news: dict[str, DataFrame | None] = {}
     for name, df in snaps_now.items():
-        state_path, snap_path = _paths(state_root, name)
-        has_snap = os.path.exists(snap_path)
-        if df is None and not has_snap:
-            diffs[name] = None
-            news[name] = None
-            stats[name] = 0
-            continue
-        old = spark.read.parquet(snap_path) if has_snap else df.limit(0)
-        if df is not None:
-            nxt = snap_path + ".next"
-            shutil.rmtree(nxt, ignore_errors=True)
-            df.write.parquet(nxt)  # ONE silver scan per source
-            cur = spark.read.parquet(nxt)
-        else:
-            nxt, cur = None, old.limit(0)
-        cols = [c for c in cur.columns if c != "_k"]
-        changes = frame_changes(old, cur, "_k", compare_cols=cols,
-                                include_old=True).localCheckpoint()
-        n = changes.count()
-        stats[name] = n
-        diffs[name] = changes if n else None
-        news[name] = cur
-        if n and nxt is not None:
-            pending.append((nxt, snap_path))
-        elif nxt is not None:
-            shutil.rmtree(nxt, ignore_errors=True)
+        changes, stats[name], news[name] = diff_snapshot(
+            spark, df, state_paths(state_root, name)[1], pending)
+        diffs[name] = changes if stats[name] else None
     if not any(diffs[n] is not None for n in _SNAPS):
         return stats
 
@@ -495,13 +438,10 @@ def refresh(spark: SparkSession, silver_root: str,
         ch = diffs[name]
         if ch is None:
             continue
-        state_path = _paths(state_root, name)[0]
-        state = _state(spark, state_root, name)
-        nxt = state_path + ".next"
-        shutil.rmtree(nxt, ignore_errors=True)
-        fold_grouped_sums(state, ch, group, sums).write.parquet(nxt)
-        states[name] = spark.read.parquet(nxt)
-        pending.append((nxt, state_path))
+        states[name] = stage_state(
+            spark, fold_grouped_sums(_state(spark, state_root, name), ch,
+                                     group, sums),
+            state_paths(state_root, name)[0], pending)
         touched_parts.append(_images(ch, ["_student", "_school",
                                           "_evdate"]))
 
@@ -523,14 +463,11 @@ def refresh(spark: SparkSession, silver_root: str,
         delta = delta.select(
             *[_sent(c).alias(c) for c in _DISC_GROUP],
             *_DISC_SUMS, "_sgn").localCheckpoint()
-        state_path = _paths(state_root, "disc")[0]
-        nxt = state_path + ".next"
-        shutil.rmtree(nxt, ignore_errors=True)
-        fold_grouped_sums_signed(_state(spark, state_root, "disc"),
-                                 delta, _DISC_GROUP, _DISC_SUMS) \
-            .write.parquet(nxt)
-        states["disc"] = spark.read.parquet(nxt)
-        pending.append((nxt, state_path))
+        states["disc"] = stage_state(
+            spark, fold_grouped_sums_signed(
+                _state(spark, state_root, "disc"), delta, _DISC_GROUP,
+                _DISC_SUMS),
+            state_paths(state_root, "disc")[0], pending)
         touched_parts.append(delta.select(
             "_student", "_school",
             F.col("_incdate").alias("_evdate")))
@@ -546,81 +483,24 @@ def refresh(spark: SparkSession, silver_root: str,
                 .select("_student", "_school", "_evdate"))
         states["assoc_snap"] = news["assoc"]
 
-    if not touched_parts:
-        # Only no-op diffs (e.g. assoc change matching no events):
-        # states/snapshots still commit.
-        for staged, live in pending:
-            _commit_rename(staged, live)
-        return stats
-
-    touched = touched_parts[0]
-    for t in touched_parts[1:]:
-        touched = touched.unionAll(t)
-    touched = (touched.distinct()
-               .select(_unsent("_student"), _unsent("_school"),
-                       _unsent("_evdate"))
-               .withColumnsRenamed({"_student": "StudentKey",
-                                    "_school": "SchoolKey",
-                                    "_evdate": "_date"})
-               .localCheckpoint())
-    stats["touched_keys"] = touched.count()
-
-    recomputed = _assemble_from_states(
-        spark, silver_root, school_year, state_root, run_date,
-        touched=touched, states=states)
-    tk_gold = F.broadcast(
-        touched.select("StudentKey", "SchoolKey",
-                       F.regexp_replace("_date", "-", "")
-                       .substr(1, 8).alias("DateKey")))
-    if any(d.startswith("DateKey=") for d in os.listdir(gold)):
-        # Touched-date-partition splice (chrab_incremental discipline;
-        # crash between per-partition swaps heals by re-running — the
-        # snapshots commit after gold).
-        tdates = sorted({
-            r[0] for r in touched.select(
-                F.regexp_replace("_date", "-", "").substr(1, 8)
-                .alias("dk")).distinct().collect()
-            if r[0] is not None})
-        stats["touched_dates"] = len(tdates)
-        gold_df = spark.read.schema(CONTRACT.schema()).parquet(gold)
-        carried_t = (
-            gold_df.filter(F.col("DateKey").isin(tdates))
-            .join(tk_gold, ["StudentKey", "SchoolKey", "DateKey"],
-                  "left_anti"))
-        out = carried_t.unionByName(recomputed) \
-            .select(*CONTRACT.columns)
-        stage = gold + ".stage"
-        shutil.rmtree(stage, ignore_errors=True)
-        (out.repartition(F.col("DateKey"))
-         .write.partitionBy("DateKey").parquet(stage))
-        for dk in tdates:
-            src = os.path.join(stage, f"DateKey={dk}")
-            dst = os.path.join(gold, f"DateKey={dk}")
-            old = dst + ".swap-old"
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(dst):
-                os.rename(dst, old)
-            if os.path.exists(src):
-                os.rename(src, dst)
-            shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-    else:
-        # Legacy flat layout: full-copy splice.
-        carried = (
-            spark.read.parquet(gold)
-            .join(tk_gold, ["StudentKey", "SchoolKey", "DateKey"],
-                  "left_anti"))
-        _swap_write(carried.unionByName(recomputed)
-                    .select(*CONTRACT.columns), gold)
-    for staged, live in pending:
-        _commit_rename(staged, live)
+    if touched_parts:
+        touched = touched_parts[0]
+        for t in touched_parts[1:]:
+            touched = touched.unionAll(t)
+        touched = (touched.distinct()
+                   .select(_unsent("_student"), _unsent("_school"),
+                           _unsent("_evdate"))
+                   .withColumnsRenamed({"_student": "StudentKey",
+                                        "_school": "SchoolKey",
+                                        "_evdate": "_date"})
+                   .localCheckpoint())
+        stats["touched_keys"] = touched.count()
+        recomputed = _assemble_from_states(
+            spark, silver_root, school_year, state_root, run_date,
+            touched=touched, states=states)
+        stats["touched_dates"] = splice_dates(spark, gold, CONTRACT,
+                                              recomputed, touched)
+    # Without touched keys (e.g. an assoc change matching no events)
+    # the states and snapshots still commit.
+    commit(pending)
     return stats
-
-
-def _commit_rename(staged: str, live: str) -> None:
-    old = live + ".swap-old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(live):
-        os.rename(live, old)
-    os.rename(staged, live)
-    shutil.rmtree(old, ignore_errors=True)

@@ -754,14 +754,13 @@ def kmeans_fit_keyed(
 
 def pq_fit(
     corpus: DataFrame, id_col: str, vec_col: str, m: int = 4, k: int = 8,
-    iters: int = 3, cache: bool = True, sample_frac: float | None = None,
+    iters: int = 3, sample_frac: float | None = None,
 ) -> pa.Table:
     """Product-quantization codebook trainer (Jégou et al., "Product
     Quantization for Nearest Neighbor Search"): split each vector into m
     subvectors and train k-means independently per subspace. Output:
     the codebook model value, a pyarrow Table of (sub_idx, cent_id,
-    centroid) — m×k rows no matter how big the corpus is. `cache` is
-    kept for signature stability; the model lives on the driver.
+    centroid) — m×k rows no matter how big the corpus is.
 
     All m subspaces train in ONE keyed Lloyd's loop (`kmeans_fit_keyed`
     with sub_idx as the model key): iters × 2 Spark jobs total instead

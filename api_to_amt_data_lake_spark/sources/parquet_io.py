@@ -9,9 +9,16 @@ partition pruning then makes per-year reads free (SURVEY.md §4).
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# Scratch dirs of the commit protocol, each beside the live dir it
+# replaces: `swap_write`'s temp write and set-aside live dir, a
+# partitioned splice's staged write, and a staged state or snapshot
+# awaiting `commit`. None of them is a gold view.
+SCRATCH_SUFFIXES = (".swap-tmp", ".swap-old", ".stage", ".next")
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -45,6 +52,48 @@ def write_view(df: DataFrame, gold_root: str, view_name: str,
         writer = writer.partitionBy(partition_by)
     writer.parquet(path)
     return path
+
+
+def swap_write(df: DataFrame, path: str,
+               partition_by: str | None = None) -> None:
+    """Replace the parquet dir at `path` with `df`: write `.swap-tmp`,
+    move the live dir to `.swap-old`, move the new dir in, drop the old
+    one. Spark cannot overwrite a path it is reading, so this is also
+    how a dir is rewritten from itself. With `partition_by`, rows are
+    hash-partitioned on that column first, one file per partition
+    value. A crash between the two moves leaves the live dir missing
+    and its content at `.swap-old`; `repair` restores it."""
+    tmp = path + ".swap-tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    if partition_by:
+        df.repartition(F.col(partition_by)).write \
+            .partitionBy(partition_by).parquet(tmp)
+    else:
+        df.write.parquet(tmp)
+    commit([(tmp, path)])
+
+
+def repair(path: str) -> None:
+    """Restore `path` from its `.swap-old` when a crash left the live
+    dir missing between the two moves of a swap."""
+    old = path + ".swap-old"
+    if not os.path.exists(path) and os.path.exists(old):
+        os.rename(old, path)
+
+
+def commit(pending: list[tuple[str, str]]) -> None:
+    """Move each staged dir onto its live dir, in order, through the
+    live dir's `.swap-old`. A staged dir that does not exist removes
+    its live dir (a partition whose rows all went away, a snapshot
+    whose source left silver)."""
+    for staged, live in pending:
+        old = live + ".swap-old"
+        shutil.rmtree(old, ignore_errors=True)
+        if os.path.exists(live):
+            os.rename(live, old)
+        if os.path.exists(staged):
+            os.rename(staged, live)
+        shutil.rmtree(old, ignore_errors=True)
 
 
 def write_view_csv(df: DataFrame, gold_root: str, view_name: str,
@@ -255,7 +304,7 @@ def register_gold_views(spark: SparkSession, gold_root: str,
         return names
     for name in sorted(os.listdir(year_dir)):
         path = os.path.join(year_dir, name)
-        if name.endswith(("_csv", ".refresh-tmp", ".refresh-old")) \
+        if name.endswith(("_csv", *SCRATCH_SUFFIXES)) \
                 or not os.path.isdir(path):
             continue
         spark.read.parquet(path).createOrReplaceTempView(name)

@@ -140,6 +140,26 @@ def test_fold_refresh_matches_full_rebuild(spark, tmp_path):
     assert stats["sch"] == 1
     _assert_gold_matches_full(spark, silver, gold)
 
+    # CDC round 4: the section-event collection leaves silver (every
+    # event deleted), then returns. The deletes fold once: the snapshot
+    # goes with the source, so the next refresh sees no change. A
+    # source without a snapshot is new to the state, so its return is
+    # a full build.
+    import shutil
+    shutil.rmtree(silver / str(SY) / "studentSectionAttendanceEvents")
+    stats = ci.refresh(spark, str(silver), SY, str(state), str(gold),
+                       run_date=RUN_DATE)
+    assert stats["sec"] == 2
+    _assert_gold_matches_full(spark, silver, gold)
+    stats = ci.refresh(spark, str(silver), SY, str(state), str(gold),
+                       run_date=RUN_DATE)
+    assert stats == {"full_build": False, "sch": 0, "sec": 0}
+    _write(silver, "studentSectionAttendanceEvents", sec2)
+    stats = ci.refresh(spark, str(silver), SY, str(state), str(gold),
+                       run_date=RUN_DATE)
+    assert stats == {"full_build": True}
+    _assert_gold_matches_full(spark, silver, gold)
+
 
 def test_crash_between_gold_and_state_commit_heals_on_rerun(
         spark, tmp_path, monkeypatch):
@@ -197,19 +217,88 @@ def test_crash_between_gold_and_state_commit_heals_on_rerun(
     _assert_gold_matches_full(spark, silver, gold)
 
 
-def test_refresh_without_state_falls_back_to_full_build(spark, tmp_path):
+def test_crash_inside_gold_partition_commit_heals_on_rerun(
+        spark, tmp_path, monkeypatch):
+    """A crash after a touched DateKey partition was set aside, before
+    its rewrite moved in, leaves that partition missing. The rerun
+    restores it before the splice reads the carried rows, so the
+    untouched keys of that date survive. Inject the crash by failing
+    the first move out of the splice's staged write."""
+    import os as _os
+
+    import pytest
+
     from api_to_amt_data_lake_spark.amt import chrab_incremental as ci
 
-    silver = tmp_path / "silver"
+    silver, gold, state = (tmp_path / "silver", tmp_path / "gold",
+                           tmp_path / "state")
     ssa, cal = _base_docs()
     _write(silver, "studentSchoolAssociations", ssa)
     _write(silver, "calendarDates", cal)
     _write(silver, "studentSchoolAttendanceEvents",
            [_sch_ev(1, "STU0", 100, "2023-09-01", "In Attendance")])
-    stats = ci.refresh(spark, str(silver), SY, str(tmp_path / "state"),
-                       str(tmp_path / "gold"), run_date=RUN_DATE)
+    ci.full_build(spark, str(silver), SY, str(state), str(gold),
+                  run_date=RUN_DATE)
+    _write(silver, "studentSchoolAttendanceEvents",
+           [_sch_ev(1, "STU0", 100, "2023-09-01", "Excused Absence")])
+
+    real_rename = _os.rename
+
+    def boom(src, dst):
+        if ".stage" in str(src):
+            raise OSError("injected crash at gold commit")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(ci.os, "rename", boom)
+    with pytest.raises(OSError, match="injected"):
+        ci.refresh(spark, str(silver), SY, str(state), str(gold),
+                   run_date=RUN_DATE)
+    monkeypatch.setattr(ci.os, "rename", real_rename)
+    live = gold / str(SY) / ci.VIEW_NAME
+    assert not (live / "DateKey=20230901").exists()
+
+    stats = ci.refresh(spark, str(silver), SY, str(state), str(gold),
+                       run_date=RUN_DATE)
+    assert stats["full_build"] is False and stats["sch"] == 1
+    assert stats["touched_dates"] == 1
+    _assert_gold_matches_full(spark, silver, gold)
+
+
+def test_refresh_without_state_falls_back_to_full_build(spark, tmp_path):
+    import os
+    import shutil
+
+    from api_to_amt_data_lake_spark.amt import chrab_incremental as ci
+
+    silver = tmp_path / "silver"
+    gold, state = tmp_path / "gold", tmp_path / "state"
+    ssa, cal = _base_docs()
+    _write(silver, "studentSchoolAssociations", ssa)
+    _write(silver, "calendarDates", cal)
+    _write(silver, "studentSchoolAttendanceEvents",
+           [_sch_ev(1, "STU0", 100, "2023-09-01", "In Attendance")])
+    stats = ci.refresh(spark, str(silver), SY, str(state), str(gold),
+                       run_date=RUN_DATE)
     assert stats == {"full_build": True}
-    _assert_gold_matches_full(spark, silver, tmp_path / "gold")
+    _assert_gold_matches_full(spark, silver, gold)
+
+    # A gold with parquet files at its top level (the flat layout) is
+    # not spliceable: refresh rebuilds it DateKey-partitioned.
+    live = gold / str(SY) / ci.VIEW_NAME
+    flat = tmp_path / "flat"
+    ci.read_gold(spark, str(gold), SY).write.parquet(str(flat))
+    shutil.rmtree(live)
+    shutil.move(str(flat), str(live))
+    _write(silver, "studentSchoolAttendanceEvents",
+           [_sch_ev(1, "STU0", 100, "2023-09-01", "Excused Absence"),
+            _sch_ev(2, "STU2", 100, "2023-09-02", "In Attendance")])
+    stats = ci.refresh(spark, str(silver), SY, str(state), str(gold),
+                       run_date=RUN_DATE)
+    assert stats == {"full_build": True}
+    top = os.listdir(live)
+    assert any(d.startswith("DateKey=") for d in top)
+    assert not any(f.endswith(".parquet") for f in top)
+    _assert_gold_matches_full(spark, silver, gold)
 
 
 def test_year_conflict_events_still_filter_after_fold(spark, tmp_path):

@@ -611,7 +611,7 @@ def test_keyed_trainer_matches_per_subspace_kmeans(spark):
     keyed = {
         (r["sub_idx"], r["cent_id"]): [round(v, 9) for v in r["centroid"]]
         for r in pq_fit(df, "vec_id", "embedding", m=m, k=k,
-                        iters=iters, cache=False).to_pylist()
+                        iters=iters).to_pylist()
     }
     per_sub = {}
     for j in range(m):

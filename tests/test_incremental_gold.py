@@ -102,7 +102,7 @@ def test_pipeline_incremental_refresh_touches_only_listed_views(spark, tmp_path)
 
 
 def test_refresh_repairs_stale_swap_directories(spark, tmp_path):
-    """A crash between the swap renames strands .refresh-tmp/-old dirs;
+    """A crash between the swap renames strands .swap-tmp/-old dirs;
     the next refresh must clear them and succeed."""
     silver, gold = tmp_path / "silver", tmp_path / "gold"
     _write_silver(silver, [_doc(1, "2023-08-15")])
@@ -111,8 +111,8 @@ def test_refresh_repairs_stale_swap_directories(spark, tmp_path):
         _keys(spark, "20230815"), "DateKey")
     # strand both directories as a crashed swap would
     import shutil
-    shutil.copytree(p, p + ".refresh-tmp")
-    shutil.copytree(p, p + ".refresh-old")
+    shutil.copytree(p, p + ".swap-tmp")
+    shutil.copytree(p, p + ".swap-old")
     _write_silver(silver, [_doc(1, "2023-08-15"), _doc(2, "2023-09-02")])
     p2 = refresh_view_incremental(
         spark, "dateDim", str(silver), str(gold), SY,
@@ -120,8 +120,8 @@ def test_refresh_repairs_stale_swap_directories(spark, tmp_path):
     got = {r.DateKey for r in spark.read.parquet(p2).collect()}
     assert got == {"20230815", "20230902"}
     import os
-    assert not os.path.exists(p2 + ".refresh-tmp")
-    assert not os.path.exists(p2 + ".refresh-old")
+    assert not os.path.exists(p2 + ".swap-tmp")
+    assert not os.path.exists(p2 + ".swap-old")
 
 
 def test_register_gold_views_sql_surface(spark, tmp_path):
@@ -130,11 +130,15 @@ def test_register_gold_views_sql_surface(spark, tmp_path):
     )
     silver, gold = tmp_path / "silver", tmp_path / "gold"
     _write_silver(silver, [_doc(1, "2023-08-15"), _doc(2, "2023-09-02")])
-    refresh_view_incremental(
+    p = refresh_view_incremental(
         spark, "dateDim", str(silver), str(gold), SY,
         _keys(spark, "20230815", "20230902"), "DateKey")
+    # Scratch dirs a crashed commit strands are not views.
+    import shutil
+    shutil.copytree(p, p + ".swap-old")
+    shutil.copytree(p, p + ".stage")
     names = register_gold_views(spark, str(gold), SY)
-    assert "dateDim" in names
+    assert names == ["dateDim"]
     rows = spark.sql(
         "SELECT DateKey FROM dateDim ORDER BY DateKey").collect()
     assert [r.DateKey for r in rows] == ["20230815", "20230902"]
