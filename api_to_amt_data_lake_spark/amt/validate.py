@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from api_to_amt_data_lake_spark.plans.contracts import local_frame
 from api_to_amt_data_lake_spark.sources.parquet_io import register_gold_views
 
 # (child view, child FK column, parent view, parent key column)
@@ -137,4 +138,4 @@ def validate_gold(spark: SparkSession, gold_root: str,
         rows.append((f"{view}({kname}) non-null", "completeness",
                      "PASS" if nulls == 0 else "FAIL", nulls))
 
-    return spark.createDataFrame(rows, REPORT_SCHEMA)
+    return local_frame(spark, REPORT_SCHEMA, rows)

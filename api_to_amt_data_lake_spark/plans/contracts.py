@@ -6,15 +6,39 @@ Reference semantics: each view declares RESULT_COLUMNS and ends with
 DataFrame that still has the contract columns. Reproduced here as a small
 dataclass: `conform` projects/reorders (adding ''-defaulted columns where a
 branch never produced them), `empty` builds the typed empty frame.
+
+Every frame the gold path builds on the driver (the typed empty view, the
+descriptor crosswalk, the letter-grade lookup, the validation report) goes
+through `local_frame`: a pyarrow Table handed to `createDataFrame` plans a
+`LocalRelation`. A Python list would plan a `LogicalRDD` instead, whose
+every scan runs Python-worker tasks to unpickle the rows and which carries
+no size statistics, so Catalyst can neither broadcast it from the plan nor
+fold a join over an empty input away.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+
+def local_frame(spark: SparkSession, schema: T.StructType | str,
+                rows: Iterable[tuple] = ()) -> DataFrame:
+    """`rows` (tuples in `schema`'s column order; a DDL string is parsed)
+    as a `LocalRelation`: the rows live in the plan, so reading them needs
+    no Python worker, and the optimizer sees their size."""
+    if isinstance(schema, str):
+        schema = _parse_type(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 @dataclass(frozen=True)
@@ -34,7 +58,10 @@ class ViewContract:
         ])
 
     def empty(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame([], self.schema())
+        """The typed empty view, an empty `LocalRelation`: writing it
+        starts no Python-worker task, and `PropagateEmptyRelation` folds
+        any join or union over it at plan time."""
+        return local_frame(spark, self.schema())
 
     def conform(self, df: DataFrame | None, spark: SparkSession) -> DataFrame:
         """Final projection to exactly the contract columns, in order.

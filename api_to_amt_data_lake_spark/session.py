@@ -22,7 +22,11 @@ def get_spark(app_name: str = "api_to_amt_data_lake_spark",
       cluster AQE's coalescePartitions makes the initial number soft.
     - Session timezone pinned to UTC so timestamp semantics match the
       DuckDB oracle and are cluster-location-independent.
-    - Arrow enabled for the (rare) Pandas-UDF paths and fast toPandas.
+    - Arrow enabled for toPandas and the Pandas-UDF paths. Arrow is also
+      how every driver-built frame on the gold path enters Spark
+      (`plans.contracts.local_frame`): a pyarrow Table becomes a sized
+      LocalRelation, where a Python list would become a LogicalRDD
+      scanned by Python-worker tasks.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:

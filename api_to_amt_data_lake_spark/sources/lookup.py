@@ -6,6 +6,11 @@ reference's 46-row config (`helper/descriptor_map/descriptor_map.json`,
 consumed by `parquet/Common/descriptor_mapping.py:17-95`); the letter-grade
 lookup reproduces the 5-row inline table at
 `ews/student_section_grade_fact/main.py:49-57`.
+
+Both are built with `plans.contracts.local_frame`, so each is a
+`LocalRelation`: the rows sit in the plan, a join against them starts no
+Python-worker task, and the optimizer sees their size, so a join whose
+data side is empty folds away at plan time.
 """
 
 from __future__ import annotations
@@ -17,6 +22,7 @@ from api_to_amt_data_lake_spark.functions.descriptors import (
     descriptor_code_value,
     descriptor_name,
 )
+from api_to_amt_data_lake_spark.plans.contracts import local_frame
 
 # (constantName, descriptor, codeValue) — AMT descriptor-constant crosswalk.
 _DESCRIPTOR_CONSTANTS: tuple[tuple[str, str, str], ...] = (
@@ -69,10 +75,10 @@ _DESCRIPTOR_CONSTANTS: tuple[tuple[str, str, str], ...] = (
 
 
 def descriptor_constant_df(spark: SparkSession) -> DataFrame:
-    """The crosswalk as a broadcast-side DataFrame."""
-    return spark.createDataFrame(
-        list(_DESCRIPTOR_CONSTANTS), ["constantName", "descriptor", "codeValue"]
-    )
+    """The crosswalk as a broadcast-side `LocalRelation`."""
+    return local_frame(
+        spark, "constantName string, descriptor string, codeValue string",
+        _DESCRIPTOR_CONSTANTS)
 
 
 def with_descriptor_constant(df: DataFrame, column: str,
@@ -106,6 +112,8 @@ def with_descriptor_constant(df: DataFrame, column: str,
 
 def letter_grade_lookup_df(spark: SparkSession) -> DataFrame:
     """5-row letter-grade → numeric lookup (S10,
-    `ews/student_section_grade_fact/main.py:49-57` inline table)."""
+    `ews/student_section_grade_fact/main.py:49-57` inline table), a
+    `LocalRelation`."""
     rows = [("A", 95), ("B", 85), ("C", 75), ("D", 65), ("F", 55)]
-    return spark.createDataFrame(rows, ["LetterGradeEarned", "NumericGradeEarnedJoin"])
+    return local_frame(
+        spark, "LetterGradeEarned string, NumericGradeEarnedJoin bigint", rows)

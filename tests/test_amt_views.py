@@ -52,6 +52,62 @@ def test_date_dim_empty_contract(spark, tmp_path):
     assert list(df.columns) == list(date_dim.CONTRACT.columns)
 
 
+def _optimized(df):
+    return df._jdf.queryExecution().optimizedPlan()
+
+
+def _typed(schema):
+    return [(f.name, f.dataType) for f in schema]
+
+
+def test_missing_silver_plans_empty_local_relations(spark, tmp_path):
+    """With no silver collections every view optimizes to a LocalRelation
+    with the contract's columns and types: no LogicalRDD (a Python-list
+    frame, whose scans run Python-worker tasks) survives anywhere in the
+    plan, and planning starts no Spark job. The one view that reads no
+    silver, the crosswalk's authorization-scope rows, keeps its 3 rows."""
+    from api_to_amt_data_lake_spark.amt import registry
+
+    constant_rows = {"rls_StaffClassificationDescriptorScopeList": 3}
+    sc = spark.sparkContext
+    sc.setJobGroup("local-relation-guard", "plan only")
+    try:
+        for name, spec in registry.VIEWS.items():
+            df = registry.build_view(name, spark, str(tmp_path), SY,
+                                     "2024-06-01")
+            plan = _optimized(df)
+            assert "LogicalRDD" not in plan.toString(), name
+            assert plan.getClass().getSimpleName() == "LocalRelation", name
+            assert plan.data().size() == constant_rows.get(name, 0), name
+            assert _typed(df.schema) == _typed(spec.contract.schema()), name
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "local-relation-guard")) == []
+    finally:
+        sc._jsc.clearJobGroup()
+
+
+def test_lookup_frames_are_local_relations(spark):
+    from api_to_amt_data_lake_spark.sources.lookup import (
+        _DESCRIPTOR_CONSTANTS,
+        descriptor_constant_df,
+        letter_grade_lookup_df,
+    )
+
+    cw = descriptor_constant_df(spark)
+    assert _optimized(cw).getClass().getSimpleName() == "LocalRelation"
+    assert cw.dtypes == [("constantName", "string"), ("descriptor", "string"),
+                         ("codeValue", "string")]
+    rows = [tuple(r) for r in cw.collect()]
+    assert len(rows) == 45 and rows == list(_DESCRIPTOR_CONSTANTS)
+
+    lg = letter_grade_lookup_df(spark)
+    assert _optimized(lg).getClass().getSimpleName() == "LocalRelation"
+    assert lg.dtypes == [("LetterGradeEarned", "string"),
+                         ("NumericGradeEarnedJoin", "bigint")]
+    assert [tuple(r) for r in lg.collect()] == [
+        ("A", 95), ("B", 85), ("C", 75), ("D", 65), ("F", 55)]
+
+
 def test_grading_period_dim_golden(spark, silver):
     rows = grading_period_dim.build(spark, silver, SY).collect()
     # Inner join with descriptors drops the unmatched 'Unknown Period'.

@@ -181,27 +181,71 @@ def test_validate_gold_reports_orphans_dupes_and_skips(spark, tmp_path):
           "StudentSchoolKey string, StudentKey string, SchoolKey string")
     write("dateDim", [("20230815",), ("",)], "DateKey string")  # blank key
 
-    rep = {r["check"]: (r["status"], r["violations"])
-           for r in validate_gold(spark, str(tmp_path / "gold"),
-                                  SY).collect()}
-    assert rep["studentSchoolDim.SchoolKey -> schoolDim.SchoolKey"] == \
-        ("FAIL", 1)
-    assert rep["schoolDim(SchoolKey) unique"] == ("PASS", 0)
-    assert rep["studentSchoolDim(StudentSchoolKey) unique"] == ("FAIL", 1)
-    assert rep["dateDim(DateKey) non-null"] == ("FAIL", 1)
-    # absent views are SKIPPED, not failed
-    assert rep["sectionDim(SectionKey) unique"] == ("SKIPPED", 0)
-    assert rep[("ews_studentSectionGradeFact.StudentSectionKey -> "
-                "studentSectionDim.StudentSectionKey")] == ("SKIPPED", 0)
+    def report():
+        df = validate_gold(spark, str(tmp_path / "gold"), SY)
+        assert df.dtypes == [("check", "string"), ("kind", "string"),
+                             ("status", "string"), ("violations", "bigint")]
+        return [tuple(r) for r in df.collect()]
 
-    # repair the lake -> the previously failing checks pass
+    skip = ("SKIPPED", 0)
+    ri, nn, uq = "referential", "completeness", "uniqueness"
+    # Every check, in report order: RI checks (each followed by its
+    # child FK's blank count), then uniqueness + PK completeness per
+    # dimension. Absent views are SKIPPED, not failed.
+    expected = [
+        ("studentSchoolDim.SchoolKey -> schoolDim.SchoolKey", ri, "FAIL", 1),
+        ("studentSchoolDim.SchoolKey non-null", nn, "PASS", 0),
+        ("studentSectionDim.StudentSchoolKey -> "
+         "studentSchoolDim.StudentSchoolKey", ri, *skip),
+        ("studentSectionDim.StudentSchoolKey non-null", nn, *skip),
+        ("ews_studentSectionGradeFact.StudentSectionKey -> "
+         "studentSectionDim.StudentSectionKey", ri, *skip),
+        ("ews_studentSectionGradeFact.StudentSectionKey non-null", nn, *skip),
+        ("ews_studentSectionGradeFact.SchoolKey -> schoolDim.SchoolKey",
+         ri, *skip),
+        ("ews_studentSectionGradeFact.SchoolKey non-null", nn, *skip),
+        ("chrab_chronicAbsenteeismAttendanceFact.StudentSchoolKey -> "
+         "allStudentSchoolDim.StudentSchoolKey", ri, *skip),
+        ("chrab_chronicAbsenteeismAttendanceFact.StudentSchoolKey non-null",
+         nn, *skip),
+        ("chrab_chronicAbsenteeismAttendanceFact.SchoolKey -> "
+         "schoolDim.SchoolKey", ri, *skip),
+        ("chrab_chronicAbsenteeismAttendanceFact.SchoolKey non-null",
+         nn, *skip),
+        ("ews_studentEarlyWarningFact.StudentKey -> "
+         "allStudentSchoolDim.StudentKey", ri, *skip),
+        ("ews_studentEarlyWarningFact.StudentKey non-null", nn, *skip),
+        ("studentSchoolDemographicsBridge.StudentSchoolKey -> "
+         "studentSchoolDim.StudentSchoolKey", ri, *skip),
+        ("studentSchoolDemographicsBridge.StudentSchoolKey non-null",
+         nn, *skip),
+        ("staffSectionDim.SchoolKey -> schoolDim.SchoolKey", ri, *skip),
+        ("staffSectionDim.SchoolKey non-null", nn, *skip),
+        ("schoolDim(SchoolKey) unique", uq, "PASS", 0),
+        ("schoolDim(SchoolKey) non-null", nn, "PASS", 0),
+        ("studentSchoolDim(StudentSchoolKey) unique", uq, "FAIL", 1),
+        ("studentSchoolDim(StudentSchoolKey) non-null", nn, "PASS", 0),
+        ("studentSectionDim(StudentSectionKey) unique", uq, *skip),
+        ("studentSectionDim(StudentSectionKey) non-null", nn, *skip),
+        ("sectionDim(SectionKey) unique", uq, *skip),
+        ("sectionDim(SectionKey) non-null", nn, *skip),
+        ("dateDim(DateKey) unique", uq, "PASS", 0),
+        ("dateDim(DateKey) non-null", nn, "FAIL", 1),
+        ("gradingPeriodDim(GradingPeriodKey) unique", uq, *skip),
+        ("gradingPeriodDim(GradingPeriodKey) non-null", nn, *skip),
+        ("localEducationAgencyDim(LocalEducationAgencyKey) unique",
+         uq, *skip),
+        ("localEducationAgencyDim(LocalEducationAgencyKey) non-null",
+         nn, *skip),
+    ]
+    assert report() == expected
+
+    # repair the lake -> the previously failing checks pass, nothing else
+    # in the report moves
     write("studentSchoolDim",
           [("st1-s1", "st1", "s1"), ("st2-s2", "st2", "s2")],
           "StudentSchoolKey string, StudentKey string, SchoolKey string")
     write("dateDim", [("20230815",), ("20230816",)], "DateKey string")
-    rep2 = {r["check"]: r["status"]
-            for r in validate_gold(spark, str(tmp_path / "gold"),
-                                   SY).collect()}
-    assert rep2["studentSchoolDim.SchoolKey -> schoolDim.SchoolKey"] == "PASS"
-    assert rep2["studentSchoolDim(StudentSchoolKey) unique"] == "PASS"
-    assert rep2["dateDim(DateKey) non-null"] == "PASS"
+    assert report() == [
+        (c, k, "PASS", 0) if s == "FAIL" else (c, k, s, v)
+        for c, k, s, v in expected]
