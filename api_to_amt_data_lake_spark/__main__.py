@@ -17,6 +17,8 @@ from __future__ import annotations
 import argparse
 import sys
 
+from api_to_amt_data_lake_spark.session import POOL_WIDTH
+
 
 def _parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="api_to_amt_data_lake_spark")
@@ -28,7 +30,7 @@ def _parser() -> argparse.ArgumentParser:
     run.add_argument("--school-year", required=True)
     run.add_argument("--run-date", default=None,
                      help="YYYY-MM-DD 'today' for date predicates")
-    run.add_argument("--parallelism", type=int, default=8)
+    run.add_argument("--parallelism", type=int, default=POOL_WIDTH)
 
     sub.add_parser("views", help="list registered views")
 

@@ -68,6 +68,7 @@ from api_to_amt_data_lake_spark.amt.ews import (
     student_section_grade_fact,
 )
 from api_to_amt_data_lake_spark.plans.contracts import ViewContract
+from api_to_amt_data_lake_spark.session import pool_map
 from api_to_amt_data_lake_spark.sources.parquet_io import write_view
 
 BuilderFn = Callable[[SparkSession, str, "str | int", "str | None"], DataFrame]
@@ -180,6 +181,8 @@ def run_all(spark: SparkSession, silver_root: str, gold_root: str,
     plan a handful of tasks; every job has scheduling/commit dead time),
     so overlapping independent writes raises utilization — the gold
     phase in the reference is strictly serial (`amt_parquet.py:27-36`).
+    The pool (`session.pool_map`) runs each view's jobs under the
+    caller's job group and description.
     """
     out: dict[str, str] = {}
     cached: list[DataFrame] = []
@@ -207,10 +210,7 @@ def run_all(spark: SparkSession, silver_root: str, gold_root: str,
                 errors[spec.name] = exc
 
         if parallelism and parallelism > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=parallelism) as pool:
-                list(pool.map(one, rest_specs))
+            pool_map(spark, one, rest_specs, parallelism)
         else:
             for spec in rest_specs:
                 one(spec)

@@ -14,20 +14,30 @@ are the standard warehouse invariants over the AMT star schema:
   SchoolKeys FAILs completeness even though the RI anti join skips
   blank keys by design).
 
-Every check is one distributed aggregate; the driver only collects one
-scalar per check, so the report costs a handful of broadcast-sized anti
-joins regardless of lake size. Views absent from the gold folder (empty
-source collections) are reported as SKIPPED rather than failed — an
-empty optional collection is a legal lake state.
+Every check is one distributed count; the driver only collects one
+scalar per check. At gold sizes a check's data work is small, and its
+cost is fixed per action: planning, job submission and the wait
+between jobs. So the checks are built as lazy frames and their counts
+are submitted together from a thread pool (`session.pool_map`), which
+overlaps that fixed cost instead of paying it once per check in turn.
+Only the views a check names are read, once each (a Parquet read
+starts a schema job of its own); a gold dir no check names, empty or
+not, is never read. Views absent from the gold folder (empty source
+collections) are reported as SKIPPED rather than failed — an empty
+optional collection is a legal lake state.
 """
 
 from __future__ import annotations
+
+import functools
+import operator
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from api_to_amt_data_lake_spark.plans.contracts import local_frame
-from api_to_amt_data_lake_spark.sources.parquet_io import register_gold_views
+from api_to_amt_data_lake_spark.session import POOL_WIDTH, pool_map
 
 # (child view, child FK column, parent view, parent key column)
 RI_CHECKS: list[tuple[str, str, str, str]] = [
@@ -75,67 +85,62 @@ def validate_gold(spark: SparkSession, gold_root: str,
                   ri_checks=None, unique_keys=None) -> DataFrame:
     """One report row per check: (check, kind, status, violations) with
     status PASS / FAIL / SKIPPED (view not written). The per-check work
-    is a distributed anti join or groupBy; only the violation COUNT
-    reaches the driver."""
-    present = set(register_gold_views(spark, gold_root, school_year))
-    rows: list[tuple[str, str, str, int]] = []
-
-    def blank(col: str):
-        return F.col(col).isNull() | (F.trim(F.col(col).cast("string")) == "")
-
+    is a distributed anti join, groupBy or filter; only the violation
+    COUNT reaches the driver. Registers no temp view."""
     # `is None` (not `or`): an explicitly-passed empty list means
     # "run no checks of this kind", never "fall back to the defaults".
     ri_checks = RI_CHECKS if ri_checks is None else ri_checks
     unique_keys = UNIQUE_KEYS if unique_keys is None else unique_keys
 
+    year_dir = os.path.join(gold_root, str(school_year))
+    named = dict.fromkeys(
+        [v for child, _, parent, _ in ri_checks for v in (child, parent)]
+        + [view for view, _ in unique_keys])
+    present = [v for v in named if os.path.isdir(os.path.join(year_dir, v))]
+    views = dict(zip(present, pool_map(
+        spark, lambda v: spark.read.parquet(os.path.join(year_dir, v)),
+        present, POOL_WIDTH)))
+
+    def blank(col: str):
+        return F.col(col).isNull() | (F.trim(F.col(col).cast("string")) == "")
+
+    # (check, kind, violating rows); None rows = SKIPPED
+    checks: list[tuple[str, str, DataFrame | None]] = []
     fk_seen: set[tuple[str, str]] = set()
     for child, fk, parent, pk in ri_checks:
-        name = f"{child}.{fk} -> {parent}.{pk}"
-        if child not in present or parent not in present:
-            rows.append((name, "referential", "SKIPPED", 0))
-        else:
-            orphans = (
-                spark.table(child)
-                .filter(~blank(fk))
-                .join(spark.table(parent)
-                      .select(F.col(pk).alias(fk)).distinct(),
-                      fk, "left_anti")
-                .count()
-            )
-            rows.append((name, "referential",
-                         "PASS" if orphans == 0 else "FAIL", orphans))
+        rows, parent_rows = views.get(child), views.get(parent)
+        checks.append((
+            f"{child}.{fk} -> {parent}.{pk}", "referential",
+            None if rows is None or parent_rows is None else
+            rows.filter(~blank(fk)).join(
+                parent_rows.select(F.col(pk).alias(fk)).distinct(), fk,
+                "left_anti")))
         # FK completeness: the RI check above deliberately skips blank
         # keys, so count them here — once per (child, fk) column.
-        if (child, fk) in fk_seen:
-            continue
-        fk_seen.add((child, fk))
-        if child not in present:
-            rows.append((f"{child}.{fk} non-null", "completeness",
-                         "SKIPPED", 0))
-        else:
-            blanks = spark.table(child).filter(blank(fk)).count()
-            rows.append((f"{child}.{fk} non-null", "completeness",
-                         "PASS" if blanks == 0 else "FAIL", blanks))
+        if (child, fk) not in fk_seen:
+            fk_seen.add((child, fk))
+            checks.append((f"{child}.{fk} non-null", "completeness",
+                           None if rows is None else rows.filter(blank(fk))))
 
     for view, keys in unique_keys:
         kname = ",".join(keys)
-        if view not in present:
-            rows.append((f"{view}({kname}) unique", "uniqueness",
-                         "SKIPPED", 0))
-            rows.append((f"{view}({kname}) non-null", "completeness",
-                         "SKIPPED", 0))
-            continue
-        df = spark.table(view)
-        dupes = (
-            df.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > 1).count()
-        )
-        rows.append((f"{view}({kname}) unique", "uniqueness",
-                     "PASS" if dupes == 0 else "FAIL", dupes))
-        import functools
-        nulls = df.filter(functools.reduce(
-            lambda a, c: a | c, [blank(k) for k in keys])).count()
-        rows.append((f"{view}({kname}) non-null", "completeness",
-                     "PASS" if nulls == 0 else "FAIL", nulls))
+        rows = views.get(view)
+        checks.append((
+            f"{view}({kname}) unique", "uniqueness",
+            None if rows is None else
+            rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
+            .filter(F.col("_n") > 1)))
+        checks.append((
+            f"{view}({kname}) non-null", "completeness",
+            None if rows is None else rows.filter(
+                functools.reduce(operator.or_, [blank(k) for k in keys]))))
 
-    return local_frame(spark, REPORT_SCHEMA, rows)
+    counts = iter(pool_map(spark, DataFrame.count,
+                           [df for _, _, df in checks if df is not None],
+                           POOL_WIDTH))
+    report = []
+    for name, kind, df in checks:
+        n = 0 if df is None else next(counts)
+        status = "SKIPPED" if df is None else "FAIL" if n else "PASS"
+        report.append((name, kind, status, n))
+    return local_frame(spark, REPORT_SCHEMA, report)

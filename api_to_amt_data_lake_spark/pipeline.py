@@ -21,6 +21,7 @@ from api_to_amt_data_lake_spark.amt import registry
 from api_to_amt_data_lake_spark.amt.incremental_gold import (
     refresh_view_incremental,
 )
+from api_to_amt_data_lake_spark.session import POOL_WIDTH
 from api_to_amt_data_lake_spark.sources.rest import OdsConfig, land_all
 
 
@@ -32,7 +33,7 @@ def run_full_pipeline(
     cfg: OdsConfig | None = None,
     endpoints: list[str] | None = None,
     with_deletes: bool = True,
-    parallelism: int | None = 8,
+    parallelism: int | None = POOL_WIDTH,
     run_date: str | None = None,
     session=None,
 ) -> dict[str, dict[str, str]]:

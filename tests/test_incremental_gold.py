@@ -249,3 +249,55 @@ def test_validate_gold_reports_orphans_dupes_and_skips(spark, tmp_path):
     assert report() == [
         (c, k, "PASS", 0) if s == "FAIL" else (c, k, s, v)
         for c, k, s, v in expected]
+
+
+def test_validate_gold_reads_only_checked_views(spark, tmp_path):
+    """An empty dir of a view no check names is never read (reading it
+    raises UNABLE_TO_INFER_SCHEMA), and validation registers no temp
+    view: the full report comes back."""
+    from api_to_amt_data_lake_spark.amt.validate import validate_gold
+
+    gold = tmp_path / "gold" / str(SY)
+    spark.createDataFrame([("s1",), ("s2",)], "SchoolKey string") \
+        .write.parquet(str(gold / "schoolDim"))
+    (gold / "rls_UserDim").mkdir()
+    spark.catalog.dropTempView("schoolDim")
+
+    report = [tuple(r) for r in
+              validate_gold(spark, str(tmp_path / "gold"), SY).collect()]
+    assert len(report) == 32
+    ran = [r for r in report if r[2] != "SKIPPED"]
+    assert ran == [
+        ("schoolDim(SchoolKey) unique", "uniqueness", "PASS", 0),
+        ("schoolDim(SchoolKey) non-null", "completeness", "PASS", 0),
+    ]
+    assert all(v == 0 for *_, v in report)
+    assert "schoolDim" not in {t.name for t in spark.catalog.listTables()}
+
+
+def test_validate_gold_jobs_carry_caller_job_group(spark, tmp_path):
+    """The checks' counts run on pool threads; their jobs must still
+    belong to the caller's job group (and so carry its description)."""
+    from api_to_amt_data_lake_spark.amt.validate import validate_gold
+
+    gold = tmp_path / "gold" / str(SY)
+    spark.createDataFrame([("s1",), ("s2",)], "SchoolKey string") \
+        .write.parquet(str(gold / "schoolDim"))
+    spark.createDataFrame(
+        [("st1-s1", "st1", "s1")],
+        "StudentSchoolKey string, StudentKey string, SchoolKey string") \
+        .write.parquet(str(gold / "studentSchoolDim"))
+    spark.createDataFrame([("20230815",)], "DateKey string") \
+        .write.parquet(str(gold / "dateDim"))
+    sc = spark.sparkContext
+    group = "test-validate-gold-group"
+    sc.setJobGroup(group, "validate under a job group")
+    try:
+        report = validate_gold(spark, str(tmp_path / "gold"), SY).collect()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    ran = [r for r in report if r["status"] != "SKIPPED"]
+    assert len(ran) == 8 and all(r["status"] == "PASS" for r in ran)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= len(ran)

@@ -42,6 +42,8 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_SF_DIR", sf_dir)
     from pyspark.sql import SparkSession
 
+    from api_to_amt_data_lake_spark.session import driver_memory
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
         SparkSession.builder.appName(f"optprof-{name}")
@@ -59,7 +61,7 @@ def main() -> None:
         .config("spark.eventLog.dir", evt_dir)
         .config("spark.eventLog.compress", "false")
         .config("spark.eventLog.rolling.enabled", "false")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", driver_memory())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
