@@ -58,7 +58,6 @@ from api_to_amt_data_lake_spark.amt.chrab.chronic_absenteeism_attendance_fact im
     CONTRACT,
     assemble,
 )
-from api_to_amt_data_lake_spark.amt import incremental_gold
 from api_to_amt_data_lake_spark.amt.incremental_gold import (
     diff_snapshot,
     gold_path,
@@ -202,9 +201,8 @@ def full_build(spark: SparkSession, silver_root: str,
 def read_gold(spark: SparkSession, gold_root: str,
               school_year: str | int) -> DataFrame:
     """Read the maintained gold back in CONTRACT column order and
-    types (`incremental_gold.read_gold`)."""
-    return incremental_gold.read_gold(
-        spark, gold_path(gold_root, school_year, VIEW_NAME), CONTRACT)
+    types (`ViewContract.read`)."""
+    return CONTRACT.read(spark, gold_path(gold_root, school_year, VIEW_NAME))
 
 
 def _touched_keys(changes: DataFrame) -> DataFrame:

@@ -3,7 +3,7 @@ attendance rate, discipline counts, enrollment history).
 
 Parity target: `parquet/amt/equity/student_history_dim/main.py`. This is
 the reference's J11 flagship: it consumes SIX other gold views
-(`main.py:65-71`) plus the raw `grades` endpoint. Shape:
+(`main.py:65-71`, its `upstream`) plus the raw `grades` endpoint. Shape:
 
 - EnrollmentHistory: all_student_school_dim ⋈ school_dim, then the ordered
   string-agg A7 — sort desc (StudentKey, IsEnrolled, ExitWithdrawDateKey,
@@ -39,19 +39,11 @@ near-uniform).
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from api_to_amt_data_lake_spark.amt.base import (
-    all_student_school_dim,
-    school_dim,
-    student_school_dim,
-    student_section_dim,
-)
-from api_to_amt_data_lake_spark.amt.chrab import (
-    chronic_absenteeism_attendance_fact,
-)
-from api_to_amt_data_lake_spark.amt.equity import student_discipline_action_dim
 from api_to_amt_data_lake_spark.functions.dates import date_key
 from api_to_amt_data_lake_spark.functions.keys import sk_concat_strict
 from api_to_amt_data_lake_spark.operators.aggregates import string_agg_ordered
@@ -68,19 +60,15 @@ CONTRACT = ViewContract(
 
 
 def build(spark: SparkSession, silver_root: str, school_year: str | int,
-          run_date: str | None = None) -> DataFrame:
+          run_date: str | None = None, *,
+          upstream: Mapping[str, DataFrame]) -> DataFrame:
     grades = read_collection(spark, silver_root, school_year, "grades")
-    chrab = chronic_absenteeism_attendance_fact.build(
-        spark, silver_root, school_year, run_date)
-    schools = school_dim.build(spark, silver_root, school_year, run_date)
-    enrolled = student_school_dim.build(
-        spark, silver_root, school_year, run_date)
-    sections = student_section_dim.build(
-        spark, silver_root, school_year, run_date)
-    all_enroll = all_student_school_dim.build(
-        spark, silver_root, school_year, run_date)
-    discipline = student_discipline_action_dim.build(
-        spark, silver_root, school_year, run_date)
+    chrab = upstream["chrab_chronicAbsenteeismAttendanceFact"]
+    schools = upstream["schoolDim"]
+    enrolled = upstream["studentSchoolDim"]
+    sections = upstream["studentSectionDim"]
+    all_enroll = upstream["allStudentSchoolDim"]
+    discipline = upstream["equity_StudentDisciplineActionDim"]
 
     # --- EnrollmentHistory (`main.py:76-125`) ---
     exit_key = F.coalesce(date_key("ExitWithdrawDate"), F.lit("nan"))

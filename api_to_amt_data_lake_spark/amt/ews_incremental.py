@@ -50,7 +50,6 @@ from api_to_amt_data_lake_spark.amt.ews.student_early_warning_fact import (
     assemble,
     section_day_flags,
 )
-from api_to_amt_data_lake_spark.amt import incremental_gold
 from api_to_amt_data_lake_spark.amt.incremental_gold import (
     diff_snapshot,
     gold_path,
@@ -327,9 +326,8 @@ def full_build(spark: SparkSession, silver_root: str,
 def read_gold(spark: SparkSession, gold_root: str,
               school_year: str | int) -> DataFrame:
     """Contract-ordered read of the maintained gold
-    (`incremental_gold.read_gold`)."""
-    return incremental_gold.read_gold(
-        spark, gold_path(gold_root, school_year, VIEW_NAME), CONTRACT)
+    (`ViewContract.read`)."""
+    return CONTRACT.read(spark, gold_path(gold_root, school_year, VIEW_NAME))
 
 
 def _state(spark, state_root, name):

@@ -119,16 +119,6 @@ def splice_ready(gold: str, required: list[str]) -> bool:
             and all(os.path.exists(p) for p in required))
 
 
-def read_gold(spark: SparkSession, path: str, contract) -> DataFrame:
-    """Read a maintained gold in contract column order and types. The
-    explicit schema keeps the DateKey PARTITION column a string (type
-    inference would int-ify 'yyyymmdd' values — and the session-wide
-    inference flag can't be flipped without breaking the bucket store's
-    int `_bkt` reads); conform restores exact order."""
-    df = spark.read.schema(contract.schema()).parquet(path)
-    return contract.conform(df, spark)
-
-
 def stage_state(spark: SparkSession, df: DataFrame, live: str,
                 pending: list) -> DataFrame:
     """Write `df` as `live`'s `.next`, queue it for `commit` and return

@@ -2,14 +2,14 @@
 loop `parquet/amt_parquet.py:20-41` and parquet-existence memo-cache
 `pandasWrapper.py:219-256`).
 
-Views shared by several downstream views (the J11 reuse set, SURVEY.md §4)
-are built once and `.cache()`d by the runner instead of round-tripping
-through parquet files.
+A view built on other views (J11, SURVEY.md §4) declares them as `deps`;
+`run_all` hands it their committed gold, read with their contract schemas
+(the scan prunes to the columns used, where a cache encodes every row).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -80,38 +80,34 @@ class ViewSpec:
     collection: str  # asmt | base | chrab | engage | epp | equity | ews | qews | rls
     contract: ViewContract
     build: BuilderFn
-    # True for views consumed by other views (J11) — runner caches them.
-    shared: bool = False
+    # Views this one is built on (J11), passed to `build` as `upstream`.
+    deps: tuple[str, ...] = ()
 
 
 VIEWS: dict[str, ViewSpec] = {}
 
 
-def _register(module, collection: str, shared: bool = False) -> None:
-    spec = ViewSpec(
-        name=module.CONTRACT.name,
-        collection=collection,
-        contract=module.CONTRACT,
-        build=module.build,
-        shared=shared,
-    )
-    VIEWS[spec.name] = spec
+def _register(module, collection: str, deps: tuple[str, ...] = ()) -> None:
+    name = module.CONTRACT.name
+    assert all(d in VIEWS for d in deps), f"{name}: register its deps first"
+    VIEWS[name] = ViewSpec(name, collection, module.CONTRACT, module.build,
+                           deps)
 
 
 _register(date_dim, "base")
-_register(grading_period_dim, "base", shared=True)
-_register(school_dim, "base", shared=True)
+_register(grading_period_dim, "base")
+_register(school_dim, "base")
 _register(local_education_agency_dim, "base")
 _register(class_period_dim, "base")
 _register(section_dim, "base")
-_register(most_recent_grading_period, "base")
+_register(most_recent_grading_period, "base", deps=("gradingPeriodDim",))
 _register(feeder_school_dim, "equity")
 _register(staff_section_dim, "base")
-_register(student_section_dim, "base", shared=True)
-_register(chronic_absenteeism_attendance_fact, "chrab", shared=True)
+_register(student_section_dim, "base")
+_register(chronic_absenteeism_attendance_fact, "chrab")
 _register(student_early_warning_fact, "ews")
-_register(all_student_school_dim, "base", shared=True)
-_register(student_school_dim, "base", shared=True)
+_register(all_student_school_dim, "base")
+_register(student_school_dim, "base", deps=("allStudentSchoolDim",))
 _register(contact_person_dim, "base")
 _register(student_program_dim, "base")
 _register(student_section_grade_fact, "ews")
@@ -124,10 +120,13 @@ _register(academic_time_period_dim, "base")
 _register(student_local_education_agency_dim, "base")
 _register(student_program_cohort_dim, "equity")
 _register(student_school_food_service_program_dim, "equity")
-_register(student_discipline_action_dim, "equity", shared=True)
+_register(student_discipline_action_dim, "equity")
 _register(student_school_demographics_bridge, "base")
 _register(student_local_education_agency_demographics_bridge, "base")
-_register(student_history_dim, "equity")
+_register(student_history_dim, "equity", deps=(
+    "chrab_chronicAbsenteeismAttendanceFact", "schoolDim", "studentSchoolDim",
+    "studentSectionDim", "allStudentSchoolDim",
+    "equity_StudentDisciplineActionDim"))
 _register(rls_staff_classification_descriptor_scope_list, "rls")
 _register(rls_student_data_authorization, "rls")
 _register(rls_user_dim, "rls")
@@ -157,72 +156,73 @@ def views_in(collection: str) -> list[str]:
 
 def build_view(name: str, spark: SparkSession, silver_root: str,
                school_year: str | int, run_date: str | None = None) -> DataFrame:
-    return VIEWS[name].build(spark, silver_root, school_year, run_date)
+    """One view's plan from silver alone: its upstreams are built the
+    same way, recursively, instead of read from gold."""
+    up = {d: build_view(d, spark, silver_root, school_year, run_date)
+          for d in VIEWS[name].deps}
+    return _build(VIEWS[name], spark, silver_root, school_year, run_date, up)
+
+
+def _build(spec, spark, silver_root, school_year, run_date, upstream):
+    args = (spark, silver_root, school_year, run_date)
+    return spec.build(*args, upstream=upstream) if spec.deps \
+        else spec.build(*args)
+
+
+def write_one(spec: ViewSpec, spark: SparkSession, silver_root: str,
+              gold_root: str, school_year: str | int, run_date: str | None,
+              written: Mapping[str, str]) -> str:
+    """Build one view over its upstreams' committed gold (`written`:
+    view → gold path) and write it; returns its gold path."""
+    upstream = {d: VIEWS[d].contract.read(spark, written[d])
+                for d in spec.deps}
+    df = _build(spec, spark, silver_root, school_year, run_date, upstream)
+    return write_view(df, gold_root, spec.name, school_year)
 
 
 def run_all(spark: SparkSession, silver_root: str, gold_root: str,
             school_year: str | int, run_date: str | None = None,
             parallelism: int | None = None) -> dict[str, str]:
-    """Build and write every registered view; shared upstreams cached.
+    """Build and write every registered view; returns {view: gold_path}.
 
-    Returns {view_name: gold_path}. Unlike the reference's strictly
-    sequential loop, each view is an independent lazy plan — Spark
-    schedules the writes' stages across all executor cores.
-
-    View-on-view reuse (J11) works through the CacheManager: dependents
-    rebuild the upstream's logical plan, and Spark substitutes the cached
-    InMemoryRelation on analyzed-plan equality. That makes ordering
-    matter: shared views are cached AND materialized (their gold write)
-    first, so dependents hit a completed cache instead of racing to
-    compute it.
-
-    `parallelism` > 1 submits the remaining views' write jobs from a
-    thread pool. A single view rarely saturates the cluster (small dims
-    plan a handful of tasks; every job has scheduling/commit dead time),
-    so overlapping independent writes raises utilization — the gold
-    phase in the reference is strictly serial (`amt_parquet.py:27-36`).
-    The pool (`session.pool_map`) runs each view's jobs under the
-    caller's job group and description.
+    Views are written in dependency levels (level 0 has no deps, any
+    other view is 1 + the highest level among its deps); a dependent
+    reads its upstreams' committed gold (`write_one`). `parallelism` > 1
+    runs each level from a thread pool (`session.pool_map`, which keeps
+    the caller's job group and description), since one small view rarely
+    saturates the cluster; None or 1 runs the same levels sequentially.
+    Per-view failures are collected: one bad view neither discards the
+    writes that succeeded nor hides sibling errors, and a view whose
+    upstream failed is not built, its error naming that upstream.
     """
     out: dict[str, str] = {}
-    cached: list[DataFrame] = []
-
-    shared_specs = [s for s in VIEWS.values() if s.shared]
-    rest_specs = [s for s in VIEWS.values() if not s.shared]
-
-    # The unpersist lives in finally: a failed view write must not leak
-    # the shared upstreams in the session cache. Per-view failures are
-    # collected (not fail-fast) so one bad view neither discards the
-    # paths of writes that already succeeded nor hides sibling errors.
     errors: dict[str, Exception] = {}
-    try:
-        for spec in shared_specs:
-            df = spec.build(spark, silver_root, school_year, run_date).cache()
-            cached.append(df)
-            out[spec.name] = write_view(df, gold_root, spec.name, school_year)
 
-        def one(spec: ViewSpec) -> None:
-            try:
-                df = spec.build(spark, silver_root, school_year, run_date)
-                out[spec.name] = write_view(df, gold_root, spec.name,
-                                            school_year)
-            except Exception as exc:  # noqa: BLE001 — reported together
-                errors[spec.name] = exc
+    def one(spec: ViewSpec) -> None:
+        try:
+            failed = [d for d in spec.deps if d not in out]
+            if failed:
+                raise RuntimeError(f"upstream {', '.join(failed)} failed")
+            out[spec.name] = write_one(spec, spark, silver_root, gold_root,
+                                       school_year, run_date, out)
+        except Exception as exc:  # noqa: BLE001 — reported together
+            errors[spec.name] = exc
 
+    level: dict[str, int] = {}
+    for spec in VIEWS.values():  # `_register` puts deps first
+        level[spec.name] = 1 + max((level[d] for d in spec.deps), default=-1)
+    for n in range(max(level.values(), default=-1) + 1):
+        batch = [spec for spec in VIEWS.values() if level[spec.name] == n]
         if parallelism and parallelism > 1:
-            pool_map(spark, one, rest_specs, parallelism)
+            pool_map(spark, one, batch, parallelism)
         else:
-            for spec in rest_specs:
+            for spec in batch:
                 one(spec)
-    finally:
-        for df in cached:
-            df.unpersist()
     if errors:
         detail = "; ".join(f"{n}: {e}" for n, e in sorted(errors.items()))
         err = RuntimeError(
             f"{len(errors)} view(s) failed ({len(out)} succeeded — paths "
-            f"kept in the exception's .partial attribute): {detail}",
-        )
+            f"kept in the exception's .partial attribute): {detail}")
         err.partial = dict(out)
         raise err from next(iter(errors.values()))
     return out

@@ -44,7 +44,8 @@ def run_full_pipeline(
     assumed landed (the common test/replay path). `endpoints=None`
     pages the packaged 80-endpoint catalog (`sources/endpoints.py`) —
     the reference's zero-config `api_async` behavior. Gold builds run
-    with the parallel writer by default — shared upstreams cached once.
+    with the parallel writer by default, in dependency levels: a view
+    built on other views reads their committed gold (`registry.run_all`).
     """
     out: dict[str, dict[str, str]] = {}
     for year in school_years:

@@ -63,6 +63,18 @@ class ViewContract:
         any join or union over it at plan time."""
         return local_frame(spark, self.schema())
 
+    def read(self, spark: SparkSession, path: str) -> DataFrame:
+        """The view's gold parquet at `path`, in contract column order and
+        types. The explicit schema lets a scan prune to the columns its
+        consumer uses and keeps a `DateKey` partition column a string
+        (inference would int-ify 'yyyymmdd' values, and the session-wide
+        inference flag can't be flipped without breaking the bucket
+        store's int `_bkt` reads). A partition column is read last, so a
+        partitioned gold is reordered."""
+        df = spark.read.schema(self.schema()).parquet(path)
+        return df if df.columns == list(self.columns) \
+            else df.select(*self.columns)
+
     def conform(self, df: DataFrame | None, spark: SparkSession) -> DataFrame:
         """Final projection to exactly the contract columns, in order.
 

@@ -15,6 +15,7 @@ full directory, which is the behavior a 100 TB lake actually needs
 from __future__ import annotations
 
 import os
+import threading
 import weakref
 from collections import OrderedDict
 from glob import glob
@@ -67,13 +68,22 @@ def array_col(df: DataFrame, path: str, element_type: str):
 # entries of stopped/collected SparkContexts are purged on every access,
 # and the rest is LRU-capped (_MEMO_CAP re-reads are cheap; an unbounded
 # dict pinning dead DataFrames is not).
+#
+# Single-flight: `run_all` starts its level-0 builders together, so
+# concurrent misses on one key wait on that key's lock while the first
+# pays the one inference job. _MEMO_LOCK guards the bookkeeping (memo,
+# context refs, key locks); no Spark call runs under it. A key's lock is
+# dropped once its frame is memoized.
 _READ_MEMO: "OrderedDict[tuple, DataFrame]" = OrderedDict()
 _MEMO_CAP = 128
 _CTX_REFS: dict[int, "weakref.ref"] = {}
+_MEMO_LOCK = threading.Lock()
+_KEY_LOCKS: dict[tuple, threading.Lock] = {}
 
 
 def _purge_memo() -> None:
-    """Drop memo entries whose SparkContext is stopped or collected."""
+    """Drop memo entries whose SparkContext is stopped or collected.
+    Called under _MEMO_LOCK."""
     dead = set()
     for cid, ref in list(_CTX_REFS.items()):
         sc = ref()
@@ -114,13 +124,37 @@ def read_collection(
         tuple(int(os.path.getmtime(f) * 1000) for f in targets),
         schema.json() if schema is not None else None,
     )
-    _CTX_REFS.setdefault(id(spark.sparkContext),
-                         weakref.ref(spark.sparkContext))
-    _purge_memo()
+    with _MEMO_LOCK:
+        _CTX_REFS.setdefault(id(spark.sparkContext),
+                             weakref.ref(spark.sparkContext))
+        _purge_memo()
+        memo = _memo_get(key)
+        if memo is not None:
+            return memo
+        key_lock = _KEY_LOCKS.setdefault(key, threading.Lock())
+    with key_lock:
+        with _MEMO_LOCK:
+            memo = _memo_get(key)
+        if memo is None:
+            memo = _read(spark, targets, schema)
+            with _MEMO_LOCK:
+                _READ_MEMO[key] = memo
+                while len(_READ_MEMO) > _MEMO_CAP:
+                    _READ_MEMO.popitem(last=False)
+                _KEY_LOCKS.pop(key, None)
+    return memo
+
+
+def _memo_get(key: tuple) -> DataFrame | None:
+    """A memo hit, marked most recently used. Called under _MEMO_LOCK."""
     memo = _READ_MEMO.get(key)
     if memo is not None:
         _READ_MEMO.move_to_end(key)
-        return memo
+    return memo
+
+
+def _read(spark: SparkSession, targets: list[str],
+          schema: T.StructType | None) -> DataFrame:
     reader = spark.read.option("multiLine", "true")
     if schema is not None:
         reader = reader.schema(schema)
@@ -134,7 +168,4 @@ def read_collection(
 
         df = df.filter(F.col("_corrupt_record").isNull()) \
             .drop("_corrupt_record")
-    _READ_MEMO[key] = df
-    while len(_READ_MEMO) > _MEMO_CAP:
-        _READ_MEMO.popitem(last=False)
     return df

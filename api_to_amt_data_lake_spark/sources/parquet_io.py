@@ -44,9 +44,13 @@ def write_view(df: DataFrame, gold_root: str, view_name: str,
                partition_by: str | None = None) -> str:
     """Write a gold view. Overwrite mode replaces the reference's
     delete-then-write (`helper/helper.py:78-100` + `pandasWrapper.py:128-135`).
+    A frame whose rows live in its plan (a `LocalRelation`) is written as
+    one file: its scan would split into min(rows, cores) partitions.
     """
     path = os.path.join(gold_root, str(school_year), view_name) if school_year \
         else os.path.join(gold_root, view_name)
+    if df.isLocal():
+        df = df.coalesce(1)
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(partition_by)

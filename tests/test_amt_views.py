@@ -12,7 +12,6 @@ from api_to_amt_data_lake_spark.amt.base import (
     date_dim,
     grading_period_dim,
     local_education_agency_dim,
-    most_recent_grading_period,
     school_dim,
     section_dim,
 )
@@ -162,7 +161,9 @@ def test_section_dim_golden(spark, silver):
 
 
 def test_most_recent_grading_period_golden(spark, silver):
-    rows = most_recent_grading_period.build(spark, silver, SY).collect()
+    from api_to_amt_data_lake_spark.amt import registry
+    rows = registry.build_view("mostRecentGradingPeriod", spark, silver,
+                               SY).collect()
     assert [(r["SchoolKey"], r["GradingPeriodBeginDateKey"]) for r in rows] == \
         [("100", "20230815")]
 
@@ -274,9 +275,10 @@ def test_all_student_school_dim_golden(spark, silver):
 
 
 def test_student_school_dim_enrolled_only(spark, silver):
+    from api_to_amt_data_lake_spark.amt import registry
     from api_to_amt_data_lake_spark.amt.base import student_school_dim
-    rows = student_school_dim.build(spark, silver, SY,
-                                    run_date="2023-09-01").collect()
+    rows = registry.build_view("studentSchoolDim", spark, silver, SY,
+                               run_date="2023-09-01").collect()
     assert [r["StudentKey"] for r in rows] == ["STU1"]
     assert "IsEnrolled" not in student_school_dim.CONTRACT.columns
 
@@ -504,8 +506,9 @@ def test_student_lea_demographics_bridge_golden(spark, silver):
 
 
 def test_student_history_dim_golden(spark, silver):
-    from api_to_amt_data_lake_spark.amt.equity import student_history_dim as v
-    rows = v.build(spark, silver, SY, run_date="2023-09-01").collect()
+    from api_to_amt_data_lake_spark.amt import registry
+    rows = registry.build_view("equity_StudentHistoryDim", spark, silver, SY,
+                               run_date="2023-09-01").collect()
     # student_school_dim keeps only currently-enrolled STU1
     assert len(rows) == 1
     r = rows[0]
@@ -765,11 +768,11 @@ def test_run_all_parallel_matches_sequential(spark, silver, tmp_path):
         assert ra == rb, name
 
 
-def test_run_all_aggregates_failures_and_unpersists(spark, silver, tmp_path):
-    """One failing view must not discard successful writes, hide sibling
-    errors, or leak the shared upstream caches: run_all collects per-view
-    exceptions, raises one summary carrying the successful paths in
-    .partial, and unpersists in finally."""
+def test_run_all_aggregates_failures(spark, silver, tmp_path):
+    """One failing view must not discard successful writes or hide
+    sibling errors: run_all collects per-view exceptions and raises one
+    summary carrying the successful paths in .partial. Nothing is left
+    persisted in the session."""
     import pytest
 
     from api_to_amt_data_lake_spark.amt import registry
@@ -786,10 +789,80 @@ def test_run_all_aggregates_failures_and_unpersists(spark, silver, tmp_path):
             registry.run_all(spark, silver, str(tmp_path / "gold"), SY,
                              run_date="2023-09-01", parallelism=8)
         assert len(ei.value.partial) == 41  # every real view still landed
-        # finally-block ran: nothing left cached in the session.
         assert not spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     finally:
         del registry.VIEWS["zz_broken_view"]
+
+
+def test_run_all_skips_dependents_of_failed_upstream(spark, silver, tmp_path,
+                                                     monkeypatch):
+    """A failed upstream fails the views built on it, by name, without
+    building them; every other view still lands in .partial."""
+    import dataclasses
+
+    from api_to_amt_data_lake_spark.amt import registry
+
+    def boom(*args, **kwargs):
+        raise ValueError("injected upstream failure")
+
+    monkeypatch.setitem(registry.VIEWS, "gradingPeriodDim", dataclasses.replace(
+        registry.VIEWS["gradingPeriodDim"], build=boom))
+    with pytest.raises(RuntimeError, match="gradingPeriodDim") as ei:
+        registry.run_all(spark, silver, str(tmp_path / "gold"), SY,
+                         run_date="2023-09-01", parallelism=8)
+    msg = str(ei.value)
+    assert "gradingPeriodDim: injected upstream failure" in msg
+    assert "mostRecentGradingPeriod: upstream gradingPeriodDim failed" in msg
+    assert set(ei.value.partial) == set(registry.VIEWS) - {
+        "gradingPeriodDim", "mostRecentGradingPeriod"}
+    assert len(ei.value.partial) == 39
+
+
+def test_run_all_dependents_scan_upstream_gold(spark, silver, tmp_path,
+                                               monkeypatch):
+    """Each dependent's written frame scans every upstream's committed
+    gold parquet and holds no cached relation."""
+    from api_to_amt_data_lake_spark.amt import registry
+
+    deps = {n: s.deps for n, s in registry.VIEWS.items() if s.deps}
+    assert set(deps) == {"mostRecentGradingPeriod", "studentSchoolDim",
+                         "equity_StudentHistoryDim"}
+    keep = set(deps).union(*deps.values())
+    monkeypatch.setattr(registry, "VIEWS", {
+        n: s for n, s in registry.VIEWS.items() if n in keep})
+    frames = {}  # the frame run_all hands to write_view, per view
+    write_view = registry.write_view
+
+    def spy(df, gold_root, name, *args, **kwargs):
+        frames[name] = df
+        return write_view(df, gold_root, name, *args, **kwargs)
+
+    monkeypatch.setattr(registry, "write_view", spy)
+    out = registry.run_all(spark, silver, str(tmp_path / "gold"), SY,
+                           run_date="2023-09-01", parallelism=8)
+    assert set(out) == keep
+    for name, ups in deps.items():
+        plan = frames[name]._jdf.queryExecution().optimizedPlan().toString()
+        assert "InMemoryRelation" not in plan, name
+        files = frames[name].inputFiles()
+        for up in ups:
+            scanned = [f for f in files if f"{out[up]}/part-" in f]
+            assert scanned and all(f.endswith(".parquet") for f in scanned), \
+                (name, up)
+
+
+def test_constant_view_writes_one_file(spark, tmp_path):
+    """A view whose rows live in its plan is written as one file, not
+    one per row."""
+    from pathlib import Path
+
+    from api_to_amt_data_lake_spark.amt import registry
+
+    spec = registry.VIEWS["rls_StaffClassificationDescriptorScopeList"]
+    path = registry.write_one(spec, spark, str(tmp_path / "silver"),
+                              str(tmp_path / "gold"), SY, None, {})
+    assert len(list(Path(path).glob("part-*.parquet"))) == 1
+    assert spark.read.parquet(path).count() == 3
 
 
 def test_run_full_pipeline_end_to_end(spark, silver, tmp_path):

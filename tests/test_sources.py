@@ -319,6 +319,45 @@ def test_read_memo_bounded_and_purged(spark, tmp_path):
     assert len(js._READ_MEMO) <= js._MEMO_CAP
 
 
+def test_read_collection_single_flight(spark, tmp_path, monkeypatch):
+    """Concurrent misses on one fresh collection run one JSON read (one
+    schema-inference job) and every caller gets the same DataFrame."""
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    silver = tmp_path / "2023" / "students"
+    silver.mkdir(parents=True)
+    (silver / "students_page00000.json").write_text('[{"id": "a"}]')
+    calls = []
+    json_read = DataFrameReader.json
+
+    def slow_json(reader, *args, **kwargs):
+        calls.append(1)
+        time.sleep(0.5)  # hold the miss open while the others arrive
+        return json_read(reader, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "json", slow_json)
+    start = threading.Barrier(8, timeout=60)
+
+    def read(_):
+        start.wait()
+        return read_collection(spark, str(tmp_path), 2023, "students")
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            frames = list(pool.map(read, range(8), timeout=120))
+    finally:
+        sys.setswitchinterval(switch)
+    assert len(calls) == 1
+    assert all(f is frames[0] for f in frames)
+
+
 def test_compact_parquet_reduces_files(spark, tmp_path):
     """Compaction folds a many-small-files directory into the byte-sized
     target count with identical content."""

@@ -6,8 +6,9 @@ Usage: python tools/scale_smoke.py [n_students] [out_dir]
 
 This is a scale rehearsal, not a correctness test (the golden fixtures in
 tests/ own correctness): it checks that every view's plan executes at
-volume — no cartesian blow-ups, no driver-side collects, shared upstreams
-cached once — and prints per-view wall time so regressions stand out.
+volume — no cartesian blow-ups, no driver-side collects, each upstream
+computed once and read back from its gold — and prints per-view wall
+time so regressions stand out.
 """
 
 from __future__ import annotations
@@ -167,23 +168,19 @@ def main() -> None:
                           "parallelism": parallelism, "views": {}}))
         return
 
+    # One view at a time through run_all's per-view step; registration
+    # order writes every view after its deps.
     times: dict[str, float] = {}
+    written: dict[str, str] = {}
     total = 0.0
-    cached = []
     for name, spec in registry.VIEWS.items():
         t0 = time.time()
-        df = spec.build(spark, str(silver), SY, run_date="2023-10-01")
-        if spec.shared:
-            df = df.cache()
-            cached.append(df)
-        from api_to_amt_data_lake_spark.sources.parquet_io import write_view
-        write_view(df, str(gold), name, SY)
+        written[name] = registry.write_one(spec, spark, str(silver), str(gold),
+                                           SY, "2023-10-01", written)
         dt = time.time() - t0
         times[name] = round(dt, 2)
         total += dt
         print(f"# {name}: {dt:.2f}s", file=sys.stderr)
-    for df in cached:
-        df.unpersist()
 
     # Gold-quality gate + recorded per-round regression artifact
     # (VERDICT r8 item 7): validate referential integrity / key
